@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from e2e_data_pipeline_spark.catalog import load_table, register_views
 from e2e_data_pipeline_spark.operators.registry import dec_sum, register
 from e2e_data_pipeline_spark.schemas import TABLES
+from e2e_data_pipeline_spark.sources import write_parquet_partitioned
 
 
 @register(
@@ -120,9 +121,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     path = tempfile.mkdtemp(prefix="e2e_part_")
-    li.write.mode("overwrite").option("compression", "gzip").partitionBy(
-        "l_returnflag", "l_linestatus"
-    ).parquet(path)
+    write_parquet_partitioned(li, path, ["l_returnflag", "l_linestatus"])
     # Pin the schema on re-read: a fully-filtered (or empty-input)
     # write leaves no part files, and schema inference over an empty
     # directory throws — the schema must never depend on data arriving.
@@ -162,9 +161,9 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     path = tempfile.mkdtemp(prefix="e2e_daypart_")
-    ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
-        "overwrite"
-    ).partitionBy("day").parquet(path)
+    write_parquet_partitioned(
+        ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")), path, ["day"]
+    )
     back = (
         spark.read.schema(ev.schema.add("day", "string"))
         .parquet(path)
@@ -943,9 +942,9 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     path = tempfile.mkdtemp(prefix="e2e_dpp_")
-    ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
-        "overwrite"
-    ).partitionBy("day").parquet(path)
+    write_parquet_partitioned(
+        ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")), path, ["day"]
+    )
     fact = spark.read.schema(ev.schema.add("day", "string")).parquet(path)
     dim = (
         ev.select(F.date_format("ts", "yyyy-MM-dd").alias("day"))
@@ -1606,7 +1605,7 @@ def scan_csv_eu_locale(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite — the lakehouse backfill primitive:
-    `partitionOverwriteMode=dynamic` replaces ONLY the partitions
+    `write_parquet_partitioned` replaces ONLY the partitions
     present in the incoming batch and leaves every other partition's
     files untouched (static mode would wipe the whole table). The op
     writes all priorities partitioned-by-priority, then overwrites
@@ -1616,18 +1615,15 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     survived and targeted ones were replaced, the exactly-once
     visibility contract of a partition-level backfill.
 
-    The conf is set per-write and restored; at scale this is the
-    idempotent daily-restatement pattern (rewrite day=X only).
+    The overwrite mode is an option of the write itself, so no session
+    conf changes; at scale this is the idempotent daily-restatement
+    pattern (rewrite day=X only).
     """
-    import shutil
-    import tempfile as _tf
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    path = _tf.mkdtemp(prefix="e2e_dynow_")
-    shutil.rmtree(path, ignore_errors=True)
-    orders.write.partitionBy("o_orderpriority").parquet(path)
+    path = tempfile.mkdtemp(prefix="e2e_dynow_")
+    write_parquet_partitioned(orders, path, ["o_orderpriority"])
     repriced = orders.where(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     ).withColumn(
@@ -1638,14 +1634,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             2,
         ).cast("double"),
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        repriced.write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_parquet_partitioned(repriced, path, ["o_orderpriority"])
     # explicit schema: an all-empty write leaves no data files to
     # infer from (the zero-row sweep exercises exactly that)
     back = spark.read.schema(

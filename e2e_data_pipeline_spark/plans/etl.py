@@ -10,27 +10,34 @@ Reference stage → this flow:
 | chunked pd.read_csv gzip (:49,54-56)  A2/A3 | one spark.read.csv; gzip is  |
 |                                             | unsplittable → repartition   |
 | passenger_count != 0 filter (:34)      A4   | .where (pushed to scan)      |
-| pre/post metric counts (:32,36)        A5   | Observation on the write     |
-|                                             | pass (zero extra scans)      |
+| pre/post metric counts (:32,36)        A5   | observe_ingest: Observation  |
+|                                             | on the write pass (zero      |
+|                                             | extra scans)                 |
 | column-existence guard (:67-70)        A6   | set(cols) <= df.columns      |
 | to_datetime casts (:71-76)             A7   | F.to_timestamp withColumns   |
 | head(0).to_sql DDL / append loop (:52,78)   | jdbc_schema_only_ddl/_writer |
 |   A8/A9 — optional, no DB in sandbox        |   (built, .save() by caller) |
 | per-chunk timing prints (:61,80-81)    A10  | per-stage wall-clock dict    |
-| read_sql_table chunked (:100)          A11  | partitioned re-read          |
+| read_sql_table chunked (:100)          A11  | re-read of the one partition |
+|                                             | dir just written (basePath)  |
 | first-chunk-only export (:102)         A12  | .limit(export_limit)         |
-| to_parquet gzip (:103-106)             A13  | write_parquet_partitioned    |
+| to_parquet gzip (:103-106)             A13  | write_parquet_partitioned:   |
+|                                             | the one sink for curated and |
+|                                             | export (gzip)                |
 | GCS upload/download (:109-113,129-136)      | direct URI read/write (A14-  |
 |                                             | A16: no copy steps needed)   |
 | {color}/{year}/{month} dirs (:20-22)   A17  | partitionBy(color,year,month)|
+|                                             | + dynamic overwrite: a rerun |
+|                                             | of a month replaces only     |
+|                                             | that month (backfill-safe)   |
 | param'd orchestration (:139-170)       A18  | main_flow(**params) + CLI    |
 
 Scale notes: the 100k-row chunk machinery does not survive contact
 with Spark — partitions already bound memory, and the JDBC batchsize
 option covers the per-round-trip concern. A gzip CSV is one
-unsplittable task, so the flow repartitions immediately after read
-(at real scale the fix is "don't use gzip CSV"; the partitioned
-parquet this flow emits IS that fix).
+unsplittable task, so the flow repartitions to the cluster's default
+parallelism immediately after read (at real scale the fix is "don't
+use gzip CSV"; the partitioned parquet this flow emits IS that fix).
 """
 
 from __future__ import annotations
@@ -80,18 +87,6 @@ def clean(df: DataFrame) -> DataFrame:
     return df
 
 
-def quality_metrics(df: DataFrame) -> dict[str, int]:
-    """A5 as a standalone aggregate (kept for ad-hoc use): rows with
-    passenger_count == 0, one aggregate, no collect loop. The flow
-    itself uses :func:`observe_ingest` instead — zero extra passes."""
-    if FILTER_COLUMN not in df.columns:
-        return {"zero_passenger_rows": 0}
-    row = df.agg(
-        F.sum(F.when(F.col(FILTER_COLUMN).isin(0), 1).otherwise(0)).alias("z")
-    ).collect()[0]
-    return {"zero_passenger_rows": int(row.z or 0)}
-
-
 def observe_ingest(df: DataFrame) -> tuple[DataFrame, Observation]:
     """A5 + A10, Spark-first: attach an ``Observation`` so the row
     count and the zero-passenger data-quality metric are collected
@@ -128,9 +123,11 @@ def main_flow(
     """The reference's parametrized DAG (A18) as one driver function.
 
     fetch → scan → metrics → clean → partitioned gzip parquet →
-    re-read (pruned) → limited export. When ``jdbc_url`` is given, the
-    cleaned frame is also DDL'd + appended to
-    ``{taxi_color}-{year}-{month}`` like ingest_data.py:159.
+    re-read of the written partition → limited export. Calls for
+    different months may share ``output_dir``: each replaces only its
+    own month under ``curated/`` and its own export directory. When
+    ``jdbc_url`` is given, the cleaned frame is also DDL'd + appended
+    to ``{taxi_color}-{year}-{month}`` like ingest_data.py:159.
     """
     timings: dict[str, float] = {}
 
@@ -145,7 +142,8 @@ def main_flow(
         spark.read.option("header", True)
         .option("inferSchema", True)  # reference parity; pass a schema at scale
         .csv(staged)
-        .repartition(32)  # gzip csv = 1 task until repartitioned
+        # gzip csv = 1 task until repartitioned
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     raw, ingest_obs = observe_ingest(raw)
     timings["scan"] = time.time() - t0
@@ -179,15 +177,17 @@ def main_flow(
         jdbc_writer(cleaned, jdbc_url, table).save()
 
     t0 = time.time()
-    back = read_parquet_any(spark, out_path).where(
-        (F.col("taxi_color") == taxi_color)
-        & (F.col("year") == year)
-        & (F.col("month") == month)
+    # Read back only the partition just written: curated/ holds green
+    # (lpep_*) and yellow (tpep_*) months whose file schemas differ, and
+    # a whole-dataset read takes its schema from one of them. basePath
+    # keeps taxi_color/year/month as columns of the export.
+    back = (
+        spark.read.option("basePath", out_path)
+        .parquet(f"{out_path}/taxi_color={taxi_color}/year={year}/month={month}")
     )
     rows_out = back.count()
-    export = back.limit(export_limit)
     export_path = f"{output_dir}/export/{taxi_color}_{year}_{month}"
-    export.write.mode("overwrite").option("compression", "gzip").parquet(export_path)
+    write_parquet_partitioned(back.limit(export_limit), export_path)
     exported_rows = read_parquet_any(spark, export_path).count()
     timings["readback_export"] = time.time() - t0
 

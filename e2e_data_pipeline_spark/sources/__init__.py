@@ -1,9 +1,12 @@
 """Source/sink connector layer (SURVEY.md §2.1 Tier A).
 
-Local-filesystem and HTTP-staging connectors are fully functional; the
-JDBC and BigQuery connectors build correct writer/reader plans but need
-a live endpoint (none in this sandbox — SURVEY.md §7 risk register), so
-they are exercised structurally in tests and guarded at call time.
+Local-filesystem and HTTP-staging connectors are fully functional. Every
+partitioned parquet dataset is written by ``write_parquet_partitioned``
+(gzip, Hive-style partitions, dynamic overwrite: a rerun of a month
+replaces only that month). The JDBC and BigQuery helpers return
+configured writers/readers but need a live endpoint (none in this
+sandbox — SURVEY.md §7 risk register), so they are exercised
+structurally in tests and ``.save()``/``.load()``ed by the caller.
 """
 
 from e2e_data_pipeline_spark.sources.staging import fetch_to_staging
@@ -13,18 +16,14 @@ from e2e_data_pipeline_spark.sources.jdbc import (
     jdbc_writer,
 )
 from e2e_data_pipeline_spark.sources.object_store import (
-    apply_sink_plan,
-    bigquery_sink_plan,
-    gcs_parquet_sink_plan,
+    bigquery_writer,
     read_parquet_any,
     write_parquet_partitioned,
 )
 
 __all__ = [
-    "apply_sink_plan",
-    "bigquery_sink_plan",
+    "bigquery_writer",
     "fetch_to_staging",
-    "gcs_parquet_sink_plan",
     "jdbc_reader",
     "jdbc_schema_only_ddl",
     "jdbc_writer",

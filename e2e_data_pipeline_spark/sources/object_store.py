@@ -5,31 +5,43 @@ appends to BigQuery (:116-122), then *downloads the parquet back to
 local disk* (:129-136). Spark-first: the copy steps disappear — Spark
 reads and writes ``gs://`` / ``s3a://`` / ``file://`` URIs directly
 through the Hadoop connectors, so "upload then re-download" is just
-``write.parquet(uri)`` + ``read.parquet(uri)``. BigQuery is the same
-writer with ``.format("bigquery")`` when the connector jar is on the
-classpath (not in this sandbox).
+:func:`write_parquet_partitioned` + :func:`read_parquet_any` on the
+URI. BigQuery is a configured writer (:func:`bigquery_writer`) that the
+caller ``.save()``s when the connector jar is on the classpath (not in
+this sandbox) — the same convention as ``jdbc_writer``.
 
 The partitioned layout replaces the reference's hand-built
 ``{output_dir}/{color}_taxi/{year}/{month}`` directories
 (ingest_data.py:20-22): ``partitionBy`` gives the identical on-disk
 hierarchy plus free partition pruning on read.
+
+:func:`write_parquet_partitioned` is the one parquet sink. It overwrites
+dynamically: a write replaces only the partitions present in its input,
+so a backfill into one dataset keeps every other month, and a rerun of
+a month replaces that month instead of appending to it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.readwriter import DataFrameWriter
 
 
 def write_parquet_partitioned(
-    df: DataFrame,
-    uri: str,
-    partition_cols: list[str] | None = None,
-    compression: str = "gzip",
-    mode: str = "overwrite",
+    df: DataFrame, uri: str, partition_cols: list[str] | None = None
 ) -> None:
     """Parquet sink with the reference's gzip compression
-    (ingest_data.py:103-106) and Hive-style partition layout."""
-    w = df.write.mode(mode).option("compression", compression)
+    (ingest_data.py:103-106) and Hive-style partition layout.
+
+    ``partitionOverwriteMode=dynamic`` is set on this write only, never
+    on the session: overwrite replaces the partitions ``df`` contains
+    and leaves the rest of ``uri`` untouched. Without partition columns
+    the whole ``uri`` is replaced."""
+    w = (
+        df.write.mode("overwrite")
+        .option("compression", "gzip")
+        .option("partitionOverwriteMode", "dynamic")
+    )
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(uri)
@@ -42,60 +54,21 @@ def read_parquet_any(spark: SparkSession, uri: str) -> DataFrame:
     return spark.read.parquet(uri)
 
 
-def bigquery_sink_plan(
-    project: str, dataset: str, table: str, mode: str = "append"
-) -> dict:
-    """Writer contract for the reference's BigQuery append
+def bigquery_writer(
+    df: DataFrame, project: str, dataset: str, table: str
+) -> DataFrameWriter:
+    """Configured BigQuery writer for the reference's append
     (ingest_data.py:116-122: ``df.to_gbq(f"{dataset}.taxi_data",
     "data-eng-practice007", if_exists="append")``).
 
-    The spark-bigquery connector jar is not in this sandbox, so the
-    mapping is pinned as a plan dict that :func:`apply_sink_plan`
-    executes verbatim when the jar IS present. ``writeMethod=direct``
-    is the Storage Write API path — no staging bucket, no per-executor
-    temp files, which is the right default for an append of arbitrary
-    cluster-side size (the indirect path would funnel through one GCS
-    staging dir).  pandas' ``chunksize=100_000`` disappears: Spark
-    writes one stream per partition."""
-    return {
-        "format": "bigquery",
-        "mode": mode,
-        "options": {"table": f"{project}.{dataset}.{table}", "writeMethod": "direct"},
-        "partition_cols": [],
-    }
-
-
-def gcs_parquet_sink_plan(
-    uri: str, partition_cols: list[str] | None = None, compression: str = "gzip"
-) -> dict:
-    """Writer contract for the reference's GCS upload
-    (ingest_data.py:109-113, ``upload_from_dataframe(...,
-    PARQUET_GZIP)``): a direct ``gs://`` parquet write — the
-    local-then-upload copy step disappears.  The same plan executes
-    against ``file://`` URIs in tests, so the mechanism (format, mode,
-    compression, partition layout) is exercised even though the GCS
-    connector jar is absent here."""
-    return {
-        "format": "parquet",
-        "mode": "overwrite",
-        "options": {"compression": compression, "path": uri},
-        "partition_cols": list(partition_cols or []),
-    }
-
-
-def apply_sink_plan(df: DataFrame, plan: dict) -> None:
-    """Execute a sink plan produced by the ``*_sink_plan`` builders.
-    One code path for every connector: the tests run it with a
-    ``file://`` parquet plan; production runs it with ``gs://`` or a
-    BigQuery plan unchanged."""
-    w = df.write.format(plan["format"]).mode(plan["mode"])
-    for k, v in plan["options"].items():
-        if k != "path":
-            w = w.option(k, v)
-    if plan["partition_cols"]:
-        w = w.partitionBy(*plan["partition_cols"])
-    path = plan["options"].get("path")
-    if path is not None:
-        w.save(path)
-    else:
-        w.save()
+    ``writeMethod=direct`` is the Storage Write API path — no staging
+    bucket, no per-executor temp files, which is the right default for
+    an append of arbitrary cluster-side size (the indirect path would
+    funnel through one GCS staging dir). pandas' ``chunksize=100_000``
+    disappears: Spark writes one stream per partition."""
+    return (
+        df.write.format("bigquery")
+        .mode("append")
+        .option("table", f"{project}.{dataset}.{table}")
+        .option("writeMethod", "direct")
+    )

@@ -19,12 +19,7 @@ import shutil
 import urllib.request
 
 
-def fetch_to_staging(
-    url: str,
-    staging_dir: str,
-    filename: str | None = None,
-    timeout_s: int = 60,
-) -> str:
+def fetch_to_staging(url: str, staging_dir: str, timeout_s: int = 60) -> str:
     """Fetch ``url`` into ``staging_dir`` and return the local path.
 
     Mirrors the reference's partition-dir convention: the caller builds
@@ -32,8 +27,7 @@ def fetch_to_staging(
     (ingest_data.py:20-22); we just create it on demand.
     """
     os.makedirs(staging_dir, exist_ok=True)
-    name = filename or url.rstrip("/").rsplit("/", 1)[-1]
-    dest = os.path.join(staging_dir, name)
+    dest = os.path.join(staging_dir, url.rstrip("/").rsplit("/", 1)[-1])
     if url.startswith("file://"):
         shutil.copyfile(url[len("file://") :], dest)
         return dest

@@ -85,6 +85,43 @@ def test_main_flow_end_to_end(spark, tmp_path, color, prefix):
     assert set(res.timings_s) == {"fetch", "scan", "clean_write", "readback_export"}
 
 
+def test_main_flow_backfill_into_one_output_dir(spark, tmp_path):
+    """A backfill: several months, both taxi colors, into one
+    output_dir. Each call must keep the months written before it, a
+    yellow month written after a green one must keep its own tpep_*
+    columns, and a rerun of a month must replace that month, not
+    append to it."""
+    out = str(tmp_path / "out")
+
+    def run(color, prefix, month, n, tag=""):
+        src = str(tmp_path / f"{color}_tripdata_2019-{month:02d}{tag}.csv.gz")
+        zeros = _make_taxi_csv(src, prefix, n=n)
+        res = main_flow(
+            spark, f"file://{src}", out, taxi_color=color, year=2019, month=month
+        )
+        assert res.rows_out == n - zeros
+        assert res.exported_rows == res.rows_out  # export replaced, not appended
+        return res
+
+    def curated_rows(color, month):
+        part = f"{out}/curated/taxi_color={color}/year=2019/month={month}"
+        return spark.read.parquet(part).count()
+
+    green = run("green", "lpep", 11, 500)
+    yellow = run("yellow", "tpep", 12, 300)
+    assert curated_rows("green", 11) == green.rows_out
+    assert curated_rows("yellow", 12) == yellow.rows_out
+
+    export = dict(spark.read.parquet(f"{out}/export/yellow_2019_12").dtypes)
+    for c in ("tpep_pickup_datetime", "tpep_dropoff_datetime"):
+        assert export[c].startswith("timestamp"), export
+
+    rerun = run("green", "lpep", 11, 200, tag="-rerun")
+    assert rerun.rows_out != green.rows_out
+    assert curated_rows("green", 11) == rerun.rows_out
+    assert curated_rows("yellow", 12) == yellow.rows_out
+
+
 def test_jdbc_builders_configured(spark):
     """No DB in the sandbox: assert the JDBC reader/writer plans are
     correctly configured rather than executing them (SURVEY.md §7
@@ -252,42 +289,70 @@ def test_compaction_collapses_file_count(spark, tmp_path):
     )
 
 
-def test_bigquery_sink_plan_contract():
+def test_bigquery_writer_contract(spark, tmp_path):
     """Pin the A15 BigQuery mapping (ingest_data.py:116-122) without the
     connector jar: to_gbq(f"{dataset}.taxi_data", project,
-    if_exists="append") must translate to format=bigquery, mode=append,
-    fully-qualified table id, and the direct Storage-Write-API path (no
-    staging bucket)."""
-    from e2e_data_pipeline_spark.sources import bigquery_sink_plan
+    if_exists="append") must translate to format=bigquery, an append
+    (not an overwrite), the fully-qualified table id, and the direct
+    Storage-Write-API path (no staging bucket). A fake ``bigquery``
+    Python data source receives the ``.save()`` and records what it got;
+    its commit runs in a Python worker, so the record goes to a file."""
+    import json
 
-    plan = bigquery_sink_plan("data-eng-practice007", "trips_data_all", "taxi_data")
-    assert plan["format"] == "bigquery"
-    assert plan["mode"] == "append"
-    assert plan["options"]["table"] == "data-eng-practice007.trips_data_all.taxi_data"
-    assert plan["options"]["writeMethod"] == "direct"
-    assert plan["partition_cols"] == []
-
-
-def test_gcs_sink_plan_contract_and_executes_on_file_uri(spark, tmp_path):
-    """Pin the A14/A16 GCS mapping (ingest_data.py:109-113 PARQUET_GZIP
-    upload) AND execute the identical plan mechanism against file:// —
-    proving apply_sink_plan's format/mode/compression/partition wiring
-    is real, with only the URI scheme left to the connector."""
-    from e2e_data_pipeline_spark.sources import (
-        apply_sink_plan,
-        gcs_parquet_sink_plan,
-        read_parquet_any,
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceWriter,
+        WriterCommitMessage,
     )
 
-    gcs = gcs_parquet_sink_plan("gs://bucket/green_taxi/2019/11", ["VendorID"])
-    assert gcs["format"] == "parquet"
-    assert gcs["options"]["compression"] == "gzip"
-    assert gcs["partition_cols"] == ["VendorID"]
+    from e2e_data_pipeline_spark.sources import bigquery_writer
 
-    local = str(tmp_path / "sinkplan")
-    plan = gcs_parquet_sink_plan(f"file://{local}", ["flag"])
+    record = str(tmp_path / "bigquery_received.json")
+
+    class _RecordingWriter(DataSourceWriter):
+        def __init__(self, options, overwrite):
+            self.options = dict(options)
+            self.overwrite = overwrite
+
+        def write(self, iterator):
+            return WriterCommitMessage()
+
+        def commit(self, messages):
+            with open(record, "w") as f:
+                json.dump({"options": self.options, "overwrite": self.overwrite}, f)
+
+    class _FakeBigQuery(DataSource):
+        @classmethod
+        def name(cls):
+            return "bigquery"
+
+        def writer(self, schema, overwrite):
+            return _RecordingWriter(self.options, overwrite)
+
+    spark.dataSource.register(_FakeBigQuery)
+    df = spark.range(3)
+    bigquery_writer(df, "data-eng-practice007", "trips_data_all", "taxi_data").save()
+    got = json.load(open(record))
+    # option keys arrive lower-cased
+    assert got["options"]["table"] == "data-eng-practice007.trips_data_all.taxi_data"
+    assert got["options"]["writemethod"] == "direct"
+    assert got["overwrite"] is False
+
+
+def test_parquet_sink_on_file_uri(spark, tmp_path):
+    """Pin the A14/A16 GCS mapping (ingest_data.py:109-113 PARQUET_GZIP
+    upload): a ``gs://`` URI goes straight to write_parquet_partitioned,
+    so running it on a ``file://`` URI exercises the whole sink — gzip
+    codec, Hive-style partition dirs, read-back — with only the URI
+    scheme left to the connector."""
+    from e2e_data_pipeline_spark.sources import (
+        read_parquet_any,
+        write_parquet_partitioned,
+    )
+
+    local = str(tmp_path / "sink")
     df = spark.range(100).selectExpr("id", "id % 2 AS flag")
-    apply_sink_plan(df, plan)
+    write_parquet_partitioned(df, f"file://{local}", ["flag"])
     # Hive-style partition dirs + gzip codec on disk
     names = {f for f in os.listdir(local) if f.startswith("flag=")}
     assert names == {"flag=0", "flag=1"}
