@@ -19,9 +19,19 @@ from e2e_data_pipeline_spark.schemas import TABLES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# path -> (total row groups, total bytes); parquet footers are immutable
-# for the read-only fixtures, so one driver-side read per path suffices.
-_LAYOUT_CACHE: dict[str, tuple[int, int]] = {}
+# path -> (signature, facts): what the catalog has learned about the
+# file or directory at ``path`` (its row-group layout, the schema Spark
+# inferred for it). Facts are trusted only while the path's stat
+# signature is unchanged; a table rewritten at the same path starts
+# from an empty entry.
+_FILE_FACTS: dict[str, tuple[tuple, dict]] = {}
+
+# The parquet read settings the inferred Spark type of a column depends
+# on (TIMESTAMP -> TIMESTAMP_NTZ, TIMESTAMP(NANOS) -> BIGINT).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
 
 # Below this size a rebalance shuffle costs more than it recovers.
 _REBALANCE_MIN_BYTES = 4 << 20
@@ -29,6 +39,41 @@ _REBALANCE_MIN_BYTES = 4 << 20
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _file_facts(path: str) -> dict:
+    """The facts dict for ``path``, emptied whenever its signature
+    (inode, mtime_ns, size of the file, or of the directory itself for
+    a dataset directory) differs from the one they were learned under.
+    A directory's own stat changes when Spark overwrites it or adds or
+    removes part files, not when a part file is rewritten in place."""
+    st = os.stat(path)
+    sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+    entry = _FILE_FACTS.get(path)
+    if entry is None or entry[0] != sig:
+        entry = _FILE_FACTS[path] = (sig, {})
+    return entry[1]
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A new parquet relation over ``path``, with schema inference (a
+    Spark job that reads a footer) run once per file signature, session
+    application and schema-relevant read setting."""
+    try:
+        facts = _file_facts(path)
+    except OSError:  # not a local path: let Spark resolve (or reject) it
+        return spark.read.parquet(path)
+    key = (
+        "schema",
+        spark.sparkContext.applicationId,
+        *(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    schema = facts.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        facts[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def _parquet_layout(path: str) -> tuple[int, int]:
@@ -39,19 +84,19 @@ def _parquet_layout(path: str) -> tuple[int, int]:
     yields an empty task, so a 1-row-group file scans on 1 core no
     matter the split config.
     """
-    if path in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[path]
-    import pyarrow.parquet as pq
+    facts = _file_facts(path)
+    if "layout" not in facts:
+        import pyarrow.parquet as pq
 
-    files = (
-        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if os.path.isdir(path)
-        else [path]
-    )
-    groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    size = sum(os.path.getsize(f) for f in files)
-    _LAYOUT_CACHE[path] = (groups, size)
-    return _LAYOUT_CACHE[path]
+        files = (
+            sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+            if os.path.isdir(path)
+            else [path]
+        )
+        groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+        size = sum(os.path.getsize(f) for f in files)
+        facts["layout"] = (groups, size)
+    return facts["layout"]
 
 
 def _maybe_rebalance(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -110,10 +155,15 @@ def load_table(
 ) -> DataFrame:
     """Scan one fixture table as a DataFrame.
 
-    The schema is *not* passed to ``spark.read.schema(...)`` on purpose:
-    parquet already carries its own schema, and supplying a slightly
-    different one (e.g. TIMESTAMP vs TIMESTAMP_NTZ) would force a
-    rebase/convert. We validate against :data:`TABLES` instead.
+    The schema passed to ``spark.read.schema(...)`` is never one of
+    ours: parquet already carries its own schema, and supplying a
+    slightly different one (e.g. TIMESTAMP vs TIMESTAMP_NTZ) would
+    force a rebase/convert. The first read of a file infers it (one
+    Spark job to read a footer); later reads of the unchanged file pass
+    back exactly the schema Spark inferred, so nothing is converted and
+    no inference job runs (:func:`_read_parquet`). Every call still
+    builds a new relation, so two loads of one table in a self-join get
+    distinct attributes.
 
     ``parallelize_scan=True`` opts a CPU-heavy consumer (partial
     aggregation, decimal arithmetic, per-row UDF work — anything with
@@ -124,7 +174,7 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; known: {sorted(TABLES)}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # ts generation varies: parquet TIMESTAMP(NANOS) surfaces as
         # int64 nanos under nanosAsLong (see session.py note) and must

@@ -15,7 +15,9 @@ frames in executor memory for the session lifetime (r9 advice).
 Derived-value exactness: the cached measures are integer counts and
 integer-cent sums — associative and commutative — so any re-aggregate
 a consumer runs over the cached frame is bit-identical to aggregating
-the raw rows directly.
+the raw rows directly. ``events_daily`` (all event types) is itself
+memoized from ``events_daily_by_type``, so its consumers read pinned
+blocks instead of re-aggregating the by-type frame on every call.
 """
 
 from __future__ import annotations
@@ -100,17 +102,23 @@ def events_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """day -> (n, cents) over ALL event types — derived by
-    re-aggregating the cached by-type frame (integer sums are
-    associative, so this is bit-identical to rolling up raw rows)."""
-    return (
-        events_daily_by_type(spark, sf_dir)
-        .groupBy("day")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("cents"),
+    """day -> (n, cents) over ALL event types — derived once per
+    session+fixture by re-aggregating the cached by-type frame (integer
+    sums are associative, so this is bit-identical to rolling up raw
+    rows) and localCheckpointed, so consumers pay no shuffle for it."""
+
+    def build() -> DataFrame:
+        return (
+            events_daily_by_type(spark, sf_dir)
+            .groupBy("day")
+            .agg(
+                F.sum("n").cast("long").alias("n"),
+                F.sum("cents").cast("long").alias("cents"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
+
+    return session_cached(spark, sf_dir, "events_daily", build)
 
 
 def lineitem_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

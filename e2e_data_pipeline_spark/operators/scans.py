@@ -91,7 +91,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("header", True)
         .csv(path)
         # gzip is unsplittable → one task per file; spread before the agg
-        .repartition(8)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n_rows"),

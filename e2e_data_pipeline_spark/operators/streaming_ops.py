@@ -1217,7 +1217,9 @@ def _write_four_chunks(df, chunks: str, key: str = "event_id") -> int:
     return len(_glob.glob(f"{chunks}/c*/part-*"))
 
 
-def _run_state_checkpoint(spark: SparkSession, sf_dir: str, work: str):
+def _run_state_checkpoint(
+    spark: SparkSession, sf_dir: str, work: str, state_partitions: int | None = None
+):
     """Shared pipeline for the state-store introspection family: chunk
     events into 4 files, stream them one file per trigger through a
     per-event_type streaming aggregation (sum of exact integer cents +
@@ -1225,6 +1227,12 @@ def _run_state_checkpoint(spark: SparkSession, sf_dir: str, work: str):
     ``(ckpt, n_files)`` once all 4 micro-batches have committed
     (``n_files == 0`` means zero-row input: no batch ever commits, so
     callers must not read the state store).
+
+    ``state_partitions`` pins the state store's partition count: the
+    query then runs in ``spark.newSession()`` with
+    ``spark.sql.shuffle.partitions`` set there, which shares the
+    SparkContext but not the SQL conf, so the caller's session is never
+    mutated.
 
     The aggregation keys and values are chosen for oracle portability:
     cents sums are exact int64 on both engines (the "INT64 sums are
@@ -1243,6 +1251,9 @@ def _run_state_checkpoint(spark: SparkSession, sf_dir: str, work: str):
     n_files = _write_four_chunks(ev, chunks)
     if n_files == 0:
         return ckpt, 0
+    if state_partitions is not None:
+        spark = spark.newSession()
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     stream = (
         spark.readStream.schema("event_id long, event_type string, cents long")
         .option("maxFilesPerTrigger", 1)
@@ -1342,10 +1353,11 @@ def stream_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     first question an on-call engineer asks of a wedged streaming job
     ("did batch N commit? how many stores does this checkpoint
     carry?"). The pipeline shape is pinned (4 chunk files × one file
-    per trigger ⇒ batches 0..3; 32 shuffle partitions), so every
-    metadata field is deterministic and the oracle states them as
-    constants — plus the live-key count cross-read from the state
-    store itself, tying the two introspection sources together.
+    per trigger ⇒ batches 0..3; 32 state partitions, whatever the
+    caller's ``spark.sql.shuffle.partitions``), so every metadata field
+    is deterministic and the oracle states them as constants — plus
+    the live-key count cross-read from the state store itself, tying
+    the two introspection sources together.
 
     Zero-row inputs write no chunk files, so no batch ever commits
     and the op returns a schema-stable empty frame (empty in, empty
@@ -1358,7 +1370,9 @@ def stream_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix="state_meta_")
     try:
-        ckpt, n_files = _run_state_checkpoint(spark, sf_dir, work)
+        ckpt, n_files = _run_state_checkpoint(
+            spark, sf_dir, work, state_partitions=32
+        )
         if n_files == 0:  # zero-row input: no batch, no checkpoint
             return spark.createDataFrame(
                 [],
@@ -2336,9 +2350,10 @@ def stream_state_partition_pinning(
 # so the frozen-at-first-batch rule never meets a stale checkpoint,
 # and every wrapped op's OUTPUT is partition-count independent
 # (order-independent aggregates / state contents keyed by data).
-# Excluded by design: stream_state_metadata (its oracle pins the
-# session default 32) and stream_state_partition_pinning (the op IS
-# about pinning a specific partition count).
+# Excluded by design: stream_state_metadata (its oracle pins 32 state
+# partitions, which the op sets in a session of its own) and
+# stream_state_partition_pinning (the op IS about pinning a specific
+# partition count).
 # ---------------------------------------------------------------------------
 
 

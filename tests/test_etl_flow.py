@@ -182,6 +182,8 @@ def test_cli_entry_point(tmp_path):
     import subprocess
     import sys
 
+    from tests.conftest import REPO_ROOT
+
     src = str(tmp_path / "green_tripdata_2019-11.csv.gz")
     _make_taxi_csv(src, "lpep", n=120)
     out_dir = str(tmp_path / "out")
@@ -202,7 +204,7 @@ def test_cli_entry_point(tmp_path):
             "--month",
             "11",
         ],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         env=env,
         capture_output=True,
         text=True,

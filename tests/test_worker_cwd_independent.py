@@ -18,9 +18,11 @@ import os
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")  # driver-side import, as the harness does
+sys.path.insert(0, sys.argv[1])  # driver-side import, as the harness does
 from pyspark.sql import SparkSession
 
 spark = (
@@ -44,11 +46,11 @@ def test_pickled_op_runs_from_foreign_cwd(tmp_path):
     parts = [
         p
         for p in env.get("PYTHONPATH", "").split(os.pathsep)
-        if p and os.path.abspath(p) != "/root/repo"
+        if p and os.path.abspath(p) != REPO_ROOT
     ]
     env["PYTHONPATH"] = os.pathsep.join(parts)
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, REPO_ROOT],
         cwd=str(tmp_path),
         env=env,
         capture_output=True,
@@ -57,3 +59,12 @@ def test_pickled_op_runs_from_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "CWD_INDEPENDENT_OK" in proc.stdout
+
+
+def test_suite_imports_this_checkout():
+    """The package under test is the one beside this test file, not a
+    copy at some fixed path that happens to be first on ``sys.path``."""
+    import e2e_data_pipeline_spark
+
+    pkg = os.path.dirname(os.path.abspath(e2e_data_pipeline_spark.__file__))
+    assert os.path.dirname(pkg) == REPO_ROOT
