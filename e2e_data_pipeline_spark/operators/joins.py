@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from e2e_data_pipeline_spark.catalog import load_table
 from e2e_data_pipeline_spark.operators.registry import dec, dec_avg, dec_sum, register
+from e2e_data_pipeline_spark.session import scoped_session
 
 
 @register(
@@ -1162,41 +1163,29 @@ def join_cbo_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the same mechanism prunes far larger mistakes: join
     order is the single biggest cost lever in a star query, and stats
-    make it automatic rather than author-dependent. The optimized plan
-    is forced *while CBO is on* (Scala lazy val pins it), then session
-    confs are restored so the demo never leaks into other queries.
+    make it automatic rather than author-dependent. The query is built
+    in a :func:`~e2e_data_pipeline_spark.session.scoped_session` with
+    CBO on, so it plans under CBO whenever it runs and the caller's
+    session never has CBO turned on.
     """
     db = _cbo_materialize(spark, sf_dir)
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    }
-    try:
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        df = spark.sql(
-            f"""
-            SELECT c.c_mktsegment,
-                   COUNT(*) AS n_items,
-                   CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
-                        AS DOUBLE) AS sum_price
-            FROM {db}.lineitem l
-            JOIN {db}.orders o   ON l.l_orderkey = o.o_orderkey
-            JOIN {db}.customer c ON o.o_custkey  = c.c_custkey
-            WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-            GROUP BY c.c_mktsegment
-            """
-        )
-        # Force the optimized plan NOW, while CBO is enabled; the
-        # QueryExecution caches it, so the later collect reuses it.
-        df._jdf.queryExecution().optimizedPlan()
-        return df
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    spark = scoped_session(
+        spark,
+        {"spark.sql.cbo.enabled": "true", "spark.sql.cbo.joinReorder.enabled": "true"},
+    )
+    return spark.sql(
+        f"""
+        SELECT c.c_mktsegment,
+               COUNT(*) AS n_items,
+               CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
+                    AS DOUBLE) AS sum_price
+        FROM {db}.lineitem l
+        JOIN {db}.orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN {db}.customer c ON o.o_custkey  = c.c_custkey
+        WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
+        GROUP BY c.c_mktsegment
+        """
+    )
 
 
 @register(
@@ -1316,53 +1305,40 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join and believes itself large; the two thresholds are scoped
     to model the 100 TB case (scan-size floor lowered because the
     fixture is small; broadcast disabled because a real orders dim
-    wouldn't fit). The optimized plan is forced while the confs are
-    active (lazy-val pinning, the join_cbo_reorder pattern) and
-    tests/test_plans.py asserts the bloom_filter_agg is present.
+    wouldn't fit). Both are set in a
+    :func:`~e2e_data_pipeline_spark.session.scoped_session`, so the
+    query plans and executes under them whenever it is collected;
+    tests/test_plans.py asserts the bloom_filter_agg is present and
+    that the executed plan has no broadcast join.
     """
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
+    spark = scoped_session(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "applicationSideScanSizeThreshold": "1KB",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    )
+    per_order = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(
+            F.count("*").alias("n_lines"),
+            dec_sum("l_extendedprice").alias("order_price"),
         )
-    }
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "1KB",
+    )
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    return (
+        per_order.join(orders, per_order.l_orderkey == orders.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.sum("n_lines").alias("n_lines"),
+            dec_sum("order_price").alias("sum_price"),
         )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        per_order = (
-            load_table(spark, sf_dir, "lineitem")
-            .groupBy("l_orderkey")
-            .agg(
-                F.count("*").alias("n_lines"),
-                dec_sum("l_extendedprice").alias("order_price"),
-            )
-        )
-        orders = load_table(spark, sf_dir, "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        df = (
-            per_order.join(
-                orders, per_order.l_orderkey == orders.o_orderkey
-            )
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_orders"),
-                F.sum("n_lines").alias("n_lines"),
-                dec_sum("order_price").alias("sum_price"),
-            )
-        )
-        df._jdf.queryExecution().optimizedPlan()
-        return df
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
 
 
 @register(

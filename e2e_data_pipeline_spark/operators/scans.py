@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from e2e_data_pipeline_spark.catalog import load_table, register_views
 from e2e_data_pipeline_spark.operators.registry import dec_sum, register
 from e2e_data_pipeline_spark.schemas import TABLES
+from e2e_data_pipeline_spark.session import scoped_session
 from e2e_data_pipeline_spark.sources import write_parquet_partitioned
 
 
@@ -2496,44 +2497,41 @@ def sql_scripting_sigma_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each iteration is one partial-aggregable scan; the loop
     count is fixed, not data-dependent.
+
+    Runs in a ``scoped_session`` with scripting on, so neither the
+    conf nor the ``sclip_orders`` view reaches the caller's session.
+    The script runs inside ``spark.sql``, which returns its last
+    result as a local relation.
     """
+    spark = scoped_session(spark, {"spark.sql.scripting.enabled": "true"})
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "sclip_orders"
     )
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        moments = _sigma_moments("sclip_orders", "lo", "hi")
-        df = spark.sql(
-            f"""
-            BEGIN
-              DECLARE lo DOUBLE DEFAULT CAST('-1e18' AS DOUBLE);
-              DECLARE hi DOUBLE DEFAULT CAST('1e18' AS DOUBLE);
-              DECLARE i INT DEFAULT 0;
-              DECLARE m DOUBLE; DECLARE sd DOUBLE;
-              WHILE i < 3 DO
-                SET (m, sd) = (
-                  SELECT CAST(s AS DOUBLE) / CAST(n AS DOUBLE),
-                         sqrt((CAST(n AS DOUBLE) * (CAST(CAST((q - q % 1000000000000000000) / 1000000000000000000 AS BIGINT) AS DOUBLE) * CAST(1000000000000000000 AS DOUBLE) + CAST(CAST((q % 1000000000000000000 - q % 1000000000) / 1000000000 AS BIGINT) AS DOUBLE) * CAST(1000000000 AS DOUBLE) + CAST(CAST(q % 1000000000 AS BIGINT) AS DOUBLE))
-                               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                              / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                  FROM {moments} x
-                );
-                SET lo = m - 2 * sd;
-                SET hi = m + 2 * sd;
-                SET i = i + 1;
-              END WHILE;
-              SELECT i AS n_iters, lo, hi, m AS clipped_mean_cents,
-                     sd AS clipped_sd;
-            END
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", old)
-    return df
+    moments = _sigma_moments("sclip_orders", "lo", "hi")
+    return spark.sql(
+        f"""
+        BEGIN
+          DECLARE lo DOUBLE DEFAULT CAST('-1e18' AS DOUBLE);
+          DECLARE hi DOUBLE DEFAULT CAST('1e18' AS DOUBLE);
+          DECLARE i INT DEFAULT 0;
+          DECLARE m DOUBLE; DECLARE sd DOUBLE;
+          WHILE i < 3 DO
+            SET (m, sd) = (
+              SELECT CAST(s AS DOUBLE) / CAST(n AS DOUBLE),
+                     sqrt((CAST(n AS DOUBLE) * (CAST(CAST((q - q % 1000000000000000000) / 1000000000000000000 AS BIGINT) AS DOUBLE) * CAST(1000000000000000000 AS DOUBLE) + CAST(CAST((q % 1000000000000000000 - q % 1000000000) / 1000000000 AS BIGINT) AS DOUBLE) * CAST(1000000000 AS DOUBLE) + CAST(CAST(q % 1000000000 AS BIGINT) AS DOUBLE))
+                           - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
+              FROM {moments} x
+            );
+            SET lo = m - 2 * sd;
+            SET hi = m + 2 * sd;
+            SET i = i + 1;
+          END WHILE;
+          SELECT i AS n_iters, lo, hi, m AS clipped_mean_cents,
+                 sd AS clipped_sd;
+        END
+        """
+    )
 
 
 @register(
@@ -2756,39 +2754,34 @@ def scan_python_ds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine stopped offering the filter (conf off, API change),
     the column reads 0 and the hash breaks. The row content itself is
     the LCG formula, so DuckDB reproduces the pruned shard exactly.
-    Pushdown is conf-gated (``spark.sql.python.filterPushdown``), set
-    and restored around plan+execute (the conf-scoped-op pattern);
-    the partition-count claim is unit-pinned in
-    tests/test_python_ds.py.
+    Pushdown is conf-gated (``spark.sql.python.filterPushdown``), so
+    the query is built in a
+    :func:`~e2e_data_pipeline_spark.session.scoped_session` with the
+    conf on: it plans with pushdown whenever it runs, and the caller's
+    session is unchanged. The partition-count claim is unit-pinned in
+    tests/test_python_ds_pushdown.py.
     """
     from e2e_data_pipeline_spark.sources.python_ds import (
         register_python_sources,
     )
 
     register_python_sources(spark)
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(conf_key)
-    try:
-        spark.conf.set(conf_key, "true")
-        df = (
-            spark.read.format("sharded_lcg")
-            .option("rows", "64000")
-            .option("shards", "8")
-            .load()
-            .where(F.col("bucket") == 3)
-            .groupBy("bucket")
-            .agg(
-                F.count("*").cast("long").alias("n_rows"),
-                F.sum("val").cast("long").alias("sum_val"),
-                F.min("pushed").cast("long").alias("n_filters_pushed"),
-            )
+    spark = scoped_session(
+        spark, {"spark.sql.python.filterPushdown.enabled": "true"}
+    )
+    return (
+        spark.read.format("sharded_lcg")
+        .option("rows", "64000")
+        .option("shards", "8")
+        .load()
+        .where(F.col("bucket") == 3)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").cast("long").alias("n_rows"),
+            F.sum("val").cast("long").alias("sum_val"),
+            F.min("pushed").cast("long").alias("n_filters_pushed"),
         )
-        # pushdown happens at planning: pin plan AND result while the
-        # conf is still on (restored in finally before we return)
-        out = df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(conf_key, old)
-    return out
+    )
 
 
 _SQL_TVF_SETUP = """

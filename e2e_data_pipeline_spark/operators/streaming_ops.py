@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from e2e_data_pipeline_spark.catalog import load_table
 from e2e_data_pipeline_spark.operators.registry import register
+from e2e_data_pipeline_spark.session import scoped_session
 from e2e_data_pipeline_spark.streaming import core, stateful
 
 _TS_FMT = "%Y-%m-%d %H:%M:%S"
@@ -1229,9 +1230,9 @@ def _run_state_checkpoint(
     callers must not read the state store).
 
     ``state_partitions`` pins the state store's partition count: the
-    query then runs in ``spark.newSession()`` with
-    ``spark.sql.shuffle.partitions`` set there, which shares the
-    SparkContext but not the SQL conf, so the caller's session is never
+    query then runs in a
+    :func:`~e2e_data_pipeline_spark.session.scoped_session` with that
+    ``spark.sql.shuffle.partitions``, so the caller's session is never
     mutated.
 
     The aggregation keys and values are chosen for oracle portability:
@@ -1252,8 +1253,8 @@ def _run_state_checkpoint(
     if n_files == 0:
         return ckpt, 0
     if state_partitions is not None:
-        spark = spark.newSession()
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        parts = {"spark.sql.shuffle.partitions": str(state_partitions)}
+        spark = scoped_session(spark, parts)
     stream = (
         spark.readStream.schema("event_id long, event_type string, cents long")
         .option("maxFilesPerTrigger", 1)
@@ -1424,9 +1425,9 @@ def stream_state_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user-bucket streaming aggregation checkpoints under
     ``RocksDBStateStoreProvider``; the state files Spark wrote into
     RocksDB SSTs are then read back via the same ``statestore`` source
-    and hash-matched against the batch recompute. Provider conf is
-    session-scoped, so it is set for the query and restored in a
-    ``finally`` (the conf-scoped-op pattern from join_cbo_reorder).
+    and hash-matched against the batch recompute. The provider class
+    is set in a :func:`~e2e_data_pipeline_spark.session.scoped_session`,
+    so the caller's session keeps its own provider.
 
     Scale: RocksDB keeps state off-heap and spills to disk per
     partition — the provider choice IS the 100 TB answer, which is
@@ -1437,15 +1438,14 @@ def stream_state_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
     rocks = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    old = spark.conf.get(conf_key, None)
+    key = "spark.sql.streaming.stateStore.providerClass"
+    spark = scoped_session(spark, {key: rocks})
     work = tempfile.mkdtemp(prefix="state_rocks_")
     try:
-        spark.conf.set(conf_key, rocks)
         chunks = f"{work}/chunks"
         ckpt = f"{work}/ckpt"
         ev = load_table(spark, sf_dir, "events").select(
@@ -1488,10 +1488,6 @@ def stream_state_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(f"value.{vcols[1]}").cast("long").alias("n_events"),
         ).localCheckpoint(eager=True)
     finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
         shutil.rmtree(work, ignore_errors=True)
     return out
 
@@ -2237,14 +2233,16 @@ def stream_state_partition_pinning(
     frozen into a stateful checkpoint at FIRST run (offsets metadata),
     and later restarts silently ignore the session's new value — the
     state cannot be re-bucketed without a rebalance tool. Proof: the
-    first two event chunks run under shuffle.partitions=8, the
-    session conf is then raised to the default 32, and the restart
-    (two more chunks, same checkpoint) must STILL run 8-way state.
-    Output rows carry the per-type aggregate (hash-equal to the full
-    batch recompute — restart correctness) plus the
-    ``state-metadata`` numPartitions, which the oracle pins at 8: if
-    Spark ever started honoring the new conf mid-stream, the column
-    would read 32 and the hash would fail loudly.
+    first two event chunks run in a
+    :func:`~e2e_data_pipeline_spark.session.scoped_session` with
+    shuffle.partitions=8, and the restart (two more chunks, same
+    checkpoint) runs in the caller's session under its own partition
+    count, yet must STILL run 8-way state. Output rows carry the
+    per-type aggregate (hash-equal to the full batch recompute —
+    restart correctness) plus the ``state-metadata`` numPartitions,
+    which the oracle pins at 8: if Spark ever started honoring the
+    new conf mid-stream, the column would change and the hash would
+    fail loudly.
 
     Scale: this is exactly why you size state partitions for the
     TARGET cluster before the first production run — at 100 TB an
@@ -2262,7 +2260,6 @@ def stream_state_partition_pinning(
     chunks = f"{work}/chunks"
     ckpt = f"{work}/ckpt"
     schema = "event_id long, event_type string, cents long"
-    old_conf = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -2281,9 +2278,9 @@ def stream_state_partition_pinning(
             if _os.path.isdir(f"{chunks}/c{i}"):
                 _os.rename(f"{chunks}/c{i}", f"{staged}/c{i}")
 
-        def run_round():
+        def run_round(session):
             stream = (
-                spark.readStream.schema(schema)
+                session.readStream.schema(schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(f"{chunks}/c*")
             )
@@ -2303,14 +2300,12 @@ def stream_state_partition_pinning(
                 q.stop()
                 raise TimeoutError("partition-pinning stream hung")
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        run_round()
-        # restart under a DIFFERENT session conf — must be ignored
-        spark.conf.set("spark.sql.shuffle.partitions", old_conf)
+        run_round(scoped_session(spark, {"spark.sql.shuffle.partitions": "8"}))
+        # restart under the caller's (different) conf — must be ignored
         for i in (2, 3):
             if _os.path.isdir(f"{staged}/c{i}"):
                 _os.rename(f"{staged}/c{i}", f"{chunks}/c{i}")
-        run_round()
+        run_round(spark)
 
         n_parts = (
             spark.read.format("state-metadata")
@@ -2327,7 +2322,6 @@ def stream_state_partition_pinning(
             F.lit(int(n_parts)).cast("long").alias("state_partitions"),
         ).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_conf)
         shutil.rmtree(work, ignore_errors=True)
     return out
 
@@ -2343,24 +2337,21 @@ def stream_state_partition_pinning(
 # stream_state_rocksdb 4.6 -> 2.2, stream_state_session_window
 # 5.5 -> 2.9 at sf0.1; interleaved A/B, 3 passes). The value is
 # derived from the events table's size (one state partition per
-# 64 MB, floor 4) so it scales with the data instead of the host,
-# and SPARK_GRAFT_STREAM_PARTITIONS overrides it for deployments
-# that size state explicitly. The conf is scoped to the op body
-# (set/restore in finally): each op checkpoints into a fresh tempdir,
+# 64 MB, floor 4) so it scales with the data instead of the host.
+# Each op runs in a scoped_session with that conf, so the caller's
+# session is never touched and a lazily returned DataFrame still
+# executes under it: each op checkpoints into a fresh tempdir,
 # so the frozen-at-first-batch rule never meets a stale checkpoint,
 # and every wrapped op's OUTPUT is partition-count independent
 # (order-independent aggregates / state contents keyed by data).
 # Excluded by design: stream_state_metadata (its oracle pins 32 state
-# partitions, which the op sets in a session of its own) and
+# partitions, which the op scopes itself) and
 # stream_state_partition_pinning (the op IS about pinning a specific
 # partition count).
 # ---------------------------------------------------------------------------
 
 
 def _stream_partitions(spark: SparkSession, sf_dir: str) -> str:
-    env = _os_env.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return env
     try:
         from e2e_data_pipeline_spark.catalog import _parquet_layout, table_path
 
@@ -2373,14 +2364,9 @@ def _stream_partitions(spark: SparkSession, sf_dir: str) -> str:
 def _stream_scoped(fn):
     @_functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", _stream_partitions(spark, sf_dir)
-        )
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        parts = _stream_partitions(spark, sf_dir)
+        scoped = scoped_session(spark, {"spark.sql.shuffle.partitions": parts})
+        return fn(scoped, sf_dir)
 
     return run
 
@@ -2391,7 +2377,6 @@ _STREAM_SCOPE_EXCLUDED = {
 }
 
 import functools as _functools  # noqa: E402
-import os as _os_env  # noqa: E402
 
 from e2e_data_pipeline_spark.operators.registry import QUERIES as _Q  # noqa: E402
 

@@ -17,12 +17,16 @@ the 1000-executor / 100 TB case and merely *also* works locally:
   recompiled. This conf is static: it only takes effect in a session
   this builder creates, never in a driver-provided one
   (``__spark_entry__``), which keeps Spark's default of 100.
+- An operator that needs its own SQL conf runs in a clone of the
+  caller's session (:func:`scoped_session`), never by changing the
+  caller's; no other module sets, unsets or creates a session conf.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -40,6 +44,8 @@ _REPO_ROOT = os.path.dirname(_PKG_DIR)
 # 4 and every round after it none (rounds of 2.9-3.9 s). The cost is
 # driver memory for the classes kept, bounded by this count.
 CODEGEN_CACHE_ENTRIES = 2000
+
+_SCOPED_LOCK = threading.Lock()
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -132,3 +138,40 @@ def get_spark(app_name: str = "e2e-data-pipeline-spark") -> SparkSession:
     spark = builder.getOrCreate()
     ensure_worker_imports(spark)
     return spark
+
+
+def scoped_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` on top.
+
+    The clone keeps the caller's runtime conf, temp views, functions
+    and Python data sources, and nothing set on it reaches the caller.
+    A DataFrame built on it plans and runs under ``conf`` whenever it
+    is collected. One clone is kept per (``spark``, ``conf``); each
+    call re-syncs it to the caller's current modifiable conf, writing
+    only the keys that differ.
+    """
+    key = tuple(sorted(conf.items()))
+    with _SCOPED_LOCK:
+        clones = spark.__dict__.setdefault("_e2e_scoped_sessions", {})
+        clone = clones.get(key)
+        if clone is None:
+            clone = clones[key] = SparkSession(
+                spark.sparkContext, spark._jsparkSession.cloneSession()
+            )
+        # Compare JVM-side first: copying a conf map into Python costs
+        # one py4j round trip per entry, tens of ms for a whole session.
+        jwant = spark._jvm.java.util.HashMap(
+            spark._jsparkSession.conf().getAllAsJava()
+        )
+        for k, v in conf.items():
+            jwant.put(k, v)
+        jhave = clone._jsparkSession.conf().getAllAsJava()
+        if not jwant.equals(jhave):
+            want, have = dict(jwant), dict(jhave)
+            for k in have.keys() - want.keys():
+                if clone.conf.isModifiable(k):
+                    clone.conf.unset(k)
+            for k, v in want.items():
+                if have.get(k) != v and (k in conf or clone.conf.isModifiable(k)):
+                    clone.conf.set(k, v)
+    return clone

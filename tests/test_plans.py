@@ -537,6 +537,18 @@ def test_runtime_bloom_filter_injected(spark):
     assert "might_contain" in plan
 
 
+def test_runtime_bloom_executes_without_broadcast(spark):
+    """join_bloom_runtime disables broadcast to model a dimension too
+    big to broadcast; the conf must still hold when the returned
+    DataFrame is executed, not only when it was built."""
+    df = QUERIES["join_bloom_runtime"](spark, SF_SMALL)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+
+
 def test_jdbc_filters_are_pushed_to_database(spark):
     """scan_jdbc_pushdown's predicate must reach the JDBCRelation as
     PushedFilters — rows are filtered inside the database, not after

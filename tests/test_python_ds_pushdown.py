@@ -53,21 +53,20 @@ def test_out_of_range_bucket_yields_empty_scan():
 
 
 def test_out_of_range_bucket_empty_end_to_end(spark):
+    from e2e_data_pipeline_spark.session import scoped_session
     from e2e_data_pipeline_spark.sources.python_ds import (
         register_python_sources,
     )
 
     register_python_sources(spark)
-    prev = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        df = (
-            spark.read.format("sharded_lcg")
-            .option("rows", "800")
-            .option("shards", "8")
-            .load()
-            .where("bucket = 99")
-        )
-        assert df.count() == 0
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)
+    scoped = scoped_session(
+        spark, {"spark.sql.python.filterPushdown.enabled": "true"}
+    )
+    df = (
+        scoped.read.format("sharded_lcg")
+        .option("rows", "800")
+        .option("shards", "8")
+        .load()
+        .where("bucket = 99")
+    )
+    assert df.count() == 0
