@@ -5,12 +5,27 @@ fixture table. Reading through one function keeps the scan declarative
 (plain ``spark.read.parquet``) so Catalyst retains predicate pushdown
 and column pruning — callers ``select``/``where`` on the returned
 DataFrame and the parquet scan only materializes what survives.
+
+One rule says whether a path still holds what was read from it:
+:func:`signature`. For a file it is the file's ``(ino, mtime_ns,
+size)``; for a dataset directory it is that triple, with the relative
+path, for every entry under the directory, so a part file added,
+removed or rewritten in place changes it. The facts learned about a
+path here, the frame cache's rollups and the registry's reused plans
+are all trusted only while the signature they were made under still
+holds. A build that wants to know what it read opens
+:func:`recording_inputs`: every path whose facts are looked up inside
+it (every ``load_table`` read) is noted with its signature.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
+import stat
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,10 +36,14 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 # path -> (signature, facts): what the catalog has learned about the
 # file or directory at ``path`` (its row-group layout, the schema Spark
-# inferred for it). Facts are trusted only while the path's stat
-# signature is unchanged; a table rewritten at the same path starts
-# from an empty entry.
+# inferred for it). Facts are trusted only while the path's signature
+# is unchanged; a table rewritten at the same path starts from an
+# empty entry.
 _FILE_FACTS: dict[str, tuple[tuple, dict]] = {}
+
+# Per thread: the Inputs records open in recording_inputs(), innermost
+# last.
+_RECORDING = threading.local()
 
 # The parquet read settings the inferred Spark type of a column depends
 # on (TIMESTAMP -> TIMESTAMP_NTZ, TIMESTAMP(NANOS) -> BIGINT).
@@ -41,14 +60,69 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _file_facts(path: str) -> dict:
-    """The facts dict for ``path``, emptied whenever its signature
-    (inode, mtime_ns, size of the file, or of the directory itself for
-    a dataset directory) differs from the one they were learned under.
-    A directory's own stat changes when Spark overwrites it or adds or
-    removes part files, not when a part file is rewritten in place."""
+def signature(path: str) -> tuple:
+    """``(ino, mtime_ns, size)`` of the file at ``path``; for a
+    directory, the sorted ``(relpath, ino, mtime_ns, size)`` of every
+    entry under it. A directory's own stat does not change when a part
+    file is rewritten in place, so it is not part of its signature.
+    Raises ``OSError`` for a path that is not on the local filesystem.
+    """
     st = os.stat(path)
-    sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    entries = []
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            full = os.path.join(root, name)
+            e = os.stat(full)
+            entries.append(
+                (os.path.relpath(full, path), e.st_ino, e.st_mtime_ns, e.st_size)
+            )
+    return tuple(sorted(entries))
+
+
+class Inputs:
+    """What one build read: ``paths`` maps each path it looked up
+    facts for (every ``load_table`` read) to the path's signature at
+    that time, and ``frames`` maps each frame-cache key it used to the
+    frame it got (filled in by ``operators.frame_cache``)."""
+
+    __slots__ = ("paths", "frames")
+
+    def __init__(self) -> None:
+        self.paths: dict[str, tuple] = {}
+        self.frames: dict[tuple, object] = {}
+
+
+@contextlib.contextmanager
+def recording_inputs() -> Iterator[Inputs]:
+    """Record what the calling thread reads inside the block. Records
+    nest: a read is noted in every record open on the thread."""
+    stack = _RECORDING.__dict__.setdefault("stack", [])
+    rec = Inputs()
+    stack.append(rec)
+    try:
+        yield rec
+    finally:
+        stack.pop()
+
+
+def note_inputs(paths: dict[str, tuple], frames: dict[tuple, object]) -> None:
+    """Add ``paths`` and ``frames`` to every record open on the calling
+    thread. A path keeps the first signature noted for it, so a file
+    that changes during a build leaves a record that no longer holds."""
+    for rec in getattr(_RECORDING, "stack", ()):
+        for p, sig in paths.items():
+            rec.paths.setdefault(p, sig)
+        rec.frames.update(frames)
+
+
+def _file_facts(path: str) -> dict:
+    """The facts dict for ``path``, emptied whenever its
+    :func:`signature` differs from the one they were learned under.
+    The lookup is noted in any open :func:`recording_inputs`."""
+    sig = signature(path)
+    note_inputs({os.path.abspath(path): sig}, {})
     entry = _FILE_FACTS.get(path)
     if entry is None or entry[0] != sig:
         entry = _FILE_FACTS[path] = (sig, {})

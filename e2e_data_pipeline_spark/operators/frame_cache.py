@@ -12,6 +12,16 @@ BY FIXTURE DIR (keep-last-N) so sweep sessions that touch sf0.001 /
 sf0.01 / sf0.1 plus /tmp scale-smoke inflations don't pin every dir's
 frames in executor memory for the session lifetime (r9 advice).
 
+Each entry is also stored with what its build read (``catalog.Inputs``:
+the :func:`catalog.signature` of every path it read through
+``load_table``, and the other frames it used). A lookup whose table
+has changed since then is a miss: the frame is rebuilt and the stale
+one unpersisted. A lookup, hit or miss, notes the frame and its inputs
+in the caller's open ``catalog.recording_inputs`` records, which is how
+the registry's plan cache learns which frames a plan stands on
+(:func:`inputs_current`). This module must stay importable before the
+``operators`` package and must never import ``registry``.
+
 Derived-value exactness: the cached measures are integer counts and
 integer-cent sums — associative and commutative — so any re-aggregate
 a consumer runs over the cached frame is bit-identical to aggregating
@@ -22,45 +32,93 @@ blocks instead of re-aggregating the by-type frame on every call.
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from e2e_data_pipeline_spark.catalog import load_table
+from e2e_data_pipeline_spark.catalog import (
+    Inputs,
+    load_table,
+    note_inputs,
+    recording_inputs,
+    signature,
+)
 
 # (applicationId, sf_dir, frame-name) -> localCheckpointed DataFrame
 # (or tuple of DataFrames). Keyed by application id so a restarted
 # session never sees another context's checkpointed RDDs.
 _FRAME_CACHE: dict = {}
 
+# key -> the Inputs its build read. An entry without one is valid for
+# as long as it is resident.
+_FRAME_INPUTS: dict = {}
+
 # Keep frames for at most this many distinct fixture dirs per app.
 _CACHE_MAX_DIRS = 3
 
+# Reentrant: a frame's build may look up another frame.
+_LOCK = threading.RLock()
+
+
+def dirs_to_evict(resident: Iterable[str], sf_dir: str) -> set[str]:
+    """The fixture dirs to drop before a cache whose entries span the
+    ``resident`` dirs (oldest first, repeats allowed) takes an entry
+    for ``sf_dir``: the oldest past the keep-last-``_CACHE_MAX_DIRS``
+    bound."""
+    seen = list(dict.fromkeys(resident))
+    if sf_dir in seen or len(seen) < _CACHE_MAX_DIRS:
+        return set()
+    return set(seen[: len(seen) - (_CACHE_MAX_DIRS - 1)])
+
+
+def inputs_current(inputs: Inputs) -> bool:
+    """Whether every path in ``inputs`` still has the signature it was
+    read under and every frame in it is still the resident entry."""
+    for path, sig in inputs.paths.items():
+        try:
+            if signature(path) != sig:
+                return False
+        except OSError:
+            return False
+    return all(_FRAME_CACHE.get(k) is f for k, f in inputs.frames.items())
+
+
+def _drop(key) -> None:
+    """Remove ``key``'s entry and (best effort) unpersist its frames."""
+    val = _FRAME_CACHE.pop(key)
+    _FRAME_INPUTS.pop(key, None)
+    for f in val if isinstance(val, (tuple, list)) else (val,):
+        try:
+            f.unpersist()
+        except Exception:
+            pass
+
 
 def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
-    """Memoize ``build()`` per (applicationId, sf_dir, name), evicting
-    (and best-effort unpersisting) the oldest fixture dir's entries
-    once more than ``_CACHE_MAX_DIRS`` dirs are resident."""
+    """Memoize ``build()`` per (applicationId, sf_dir, name) while the
+    tables it read are unchanged, evicting (and best-effort
+    unpersisting) the oldest fixture dir's entries once more than
+    ``_CACHE_MAX_DIRS`` dirs are resident."""
     app = spark.sparkContext.applicationId
     key = (app, sf_dir, name)
-    if key not in _FRAME_CACHE:
-        seen: list = []
-        for a, d, _ in _FRAME_CACHE:
-            if a == app and d not in seen:
-                seen.append(d)
-        if sf_dir not in seen and len(seen) >= _CACHE_MAX_DIRS:
-            evict_dirs = set(seen[: len(seen) - (_CACHE_MAX_DIRS - 1)])
-            for k in [
-                k for k in _FRAME_CACHE if k[0] == app and k[1] in evict_dirs
-            ]:
-                val = _FRAME_CACHE.pop(k)
-                frames = val if isinstance(val, (tuple, list)) else (val,)
-                for f in frames:
-                    try:
-                        f.unpersist()
-                    except Exception:
-                        pass
-        _FRAME_CACHE[key] = build()
-    return _FRAME_CACHE[key]
+    with _LOCK:
+        inputs = _FRAME_INPUTS.get(key, Inputs())
+        if key in _FRAME_CACHE and inputs_current(inputs):
+            val = _FRAME_CACHE[key]
+        else:
+            if key in _FRAME_CACHE:
+                _drop(key)
+            stale = dirs_to_evict((d for a, d, _ in _FRAME_CACHE if a == app), sf_dir)
+            for k in [k for k in _FRAME_CACHE if k[0] == app and k[1] in stale]:
+                _drop(k)
+            with recording_inputs() as inputs:
+                val = build()
+            _FRAME_CACHE[key] = val
+            _FRAME_INPUTS[key] = inputs
+    note_inputs(inputs.paths, {**inputs.frames, key: val})
+    return val
 
 
 def events_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,22 +7,34 @@
 - The session's whole-stage-codegen cache holds the working set of the
   ``olap_mix`` benchmark keys, so a repeated pass compiles (almost)
   nothing.
+- A file's signature covers a dataset directory's contents, so a part
+  file rewritten in place or added is seen by the catalog, the frame
+  cache and the plan cache.
+- ``frame_cache`` rebuilds a rollup whose table has changed.
+- ``QUERIES[key]`` reuses the analyzed plan of an earlier build while
+  its inputs are unchanged, and never reuses a build that launched a
+  job or whose plan is nondeterministic.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from e2e_data_pipeline_spark.catalog import load_table, table_path
-from e2e_data_pipeline_spark.operators import QUERIES
+from e2e_data_pipeline_spark.operators import ORACLES, QUERIES, frame_cache, register
+from e2e_data_pipeline_spark.schemas import TABLES
 
 from tests.conftest import SF_SMALL
+from tools.check_oracle import canon
 
 # the keys of the olap_mix benchmark workload: 5 scan keys, then the 4
 # report keys that read frame-cache rollups
@@ -117,3 +129,228 @@ def test_repeated_olap_mix_pass_compiles_nothing(spark):
     # adaptive execution on, and none after the first with it off.
     assert metric.getCount() - before <= 8
 
+
+
+def _copy_fixtures(tmp_path) -> str:
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)
+    return sf
+
+
+def _halve(path: str) -> None:
+    """Rewrite the parquet file at ``path`` in place with half its rows."""
+    t = pq.read_table(path)
+    pq.write_table(t.slice(0, t.num_rows // 2), path)
+
+
+def _assert_matches_oracle(df, sf: str, key: str) -> None:
+    con = duckdb.connect()
+    for t in TABLES:
+        path = table_path(sf, t)
+        src = os.path.join(path, "*.parquet") if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    assert canon(df.toPandas()) == canon(con.sql(ORACLES[key]).df())
+
+
+def _count_builds(monkeypatch, key: str) -> list:
+    """Count the runs of ``key``'s operator body (the function the
+    registry wrapper calls through ``__wrapped__``)."""
+    q = QUERIES[key]
+    inner = q.__wrapped__
+    builds: list = []
+
+    def counted(spark, sf_dir):
+        builds.append(sf_dir)
+        return inner(spark, sf_dir)
+
+    monkeypatch.setattr(q, "__wrapped__", counted)
+    return builds
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def test_part_file_rewritten_in_place_reloads_new_schema(spark, tmp_path):
+    sf = str(tmp_path)
+    part = os.path.join(table_path(sf, "orders"), "part-0.parquet")
+    os.makedirs(os.path.dirname(part))
+    pq.write_table(pa.table({"a": [1, 2, 3]}), part)
+    assert load_table(spark, sf, "orders").columns == ["a"]
+    load_table(spark, sf, "orders")  # a cached-schema read
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    df = load_table(spark, sf, "orders")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_frame_rollup_rebuilt_after_its_table_changes(spark, tmp_path):
+    sf = _copy_fixtures(tmp_path)
+    before = QUERIES["ts_pacf"](spark, sf).collect()
+    _halve(table_path(sf, "events"))
+    df = QUERIES["ts_pacf"](spark, sf)
+    _assert_matches_oracle(df, sf, "ts_pacf")
+    assert df.collect() != before
+
+
+@pytest.mark.parametrize("key", OLAP_MIX_KEYS)
+def test_repeated_call_reuses_analyzed_plan(spark, monkeypatch, key):
+    first = QUERIES[key](spark, SF_SMALL)  # may infer schemas or fill frames
+    QUERIES[key](spark, SF_SMALL)  # a build that launches no job is kept
+    rows = _rows(first)
+    builds = _count_builds(monkeypatch, key)
+    again = QUERIES[key](spark, SF_SMALL)
+    assert builds == []
+    assert again is not first
+    assert again is not QUERIES[key](spark, SF_SMALL)
+    assert _rows(again) == rows
+
+
+def _reused_then_changed(spark, monkeypatch, key: str, sf: str, change):
+    """Fill the plan cache for ``key``, check that a call reuses it,
+    apply ``change`` and return the next call's DataFrame, checking
+    that it ran the build."""
+    QUERIES[key](spark, sf)
+    QUERIES[key](spark, sf)
+    builds = _count_builds(monkeypatch, key)
+    QUERIES[key](spark, sf)
+    assert builds == [], "a call on unchanged inputs should reuse the plan"
+    change()
+    df = QUERIES[key](spark, sf)
+    assert len(builds) == 1, "a change to the inputs should force a rebuild"
+    return df
+
+
+def test_conf_change_forces_rebuild(spark, monkeypatch, tmp_path):
+    sf = _copy_fixtures(tmp_path)
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    try:
+        df = _reused_then_changed(
+            spark, monkeypatch, "agg_groupby", sf,
+            lambda: spark.conf.set(conf, str(int(old) + 1)),
+        )
+        _assert_matches_oracle(df, sf, "agg_groupby")
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_rewritten_input_file_forces_rebuild(spark, monkeypatch, tmp_path):
+    sf = _copy_fixtures(tmp_path)
+    df = _reused_then_changed(
+        spark, monkeypatch, "agg_groupby", sf,
+        lambda: _halve(table_path(sf, "lineitem")),
+    )
+    _assert_matches_oracle(df, sf, "agg_groupby")
+
+
+def test_added_part_file_forces_rebuild(spark, monkeypatch, tmp_path):
+    sf = _copy_fixtures(tmp_path)
+    path = table_path(sf, "lineitem")
+    os.rename(path, path + ".src")
+    os.makedirs(path)
+    os.rename(path + ".src", os.path.join(path, "part-0.parquet"))
+
+    def add_part():
+        shutil.copy(os.path.join(path, "part-0.parquet"), os.path.join(path, "part-1.parquet"))
+        _halve(os.path.join(path, "part-1.parquet"))
+
+    df = _reused_then_changed(spark, monkeypatch, "agg_groupby", sf, add_part)
+    _assert_matches_oracle(df, sf, "agg_groupby")
+
+
+def test_evicted_frame_forces_rebuild(spark, monkeypatch, tmp_path):
+    sf = _copy_fixtures(tmp_path)
+
+    def evict():
+        for k in [k for k in frame_cache._FRAME_CACHE if k[1] == sf]:
+            frame_cache._drop(k)
+
+    df = _reused_then_changed(spark, monkeypatch, "ts_pacf", sf, evict)
+    _assert_matches_oracle(df, sf, "ts_pacf")
+
+
+def test_build_that_launches_a_job_runs_every_call(spark, monkeypatch):
+    builds = _count_builds(monkeypatch, "sink_parquet_partitioned")
+    for _ in range(3):
+        QUERIES["sink_parquet_partitioned"](spark, SF_SMALL)
+    assert len(builds) == 3
+
+
+def test_nondeterministic_plan_is_never_reused(spark, monkeypatch):
+    key = "test_rand_column"
+
+    @register(key)
+    def rand_column(spark, sf_dir):
+        return load_table(spark, sf_dir, "orders").select("o_orderkey", F.rand().alias("r"))
+
+    try:
+        rand_column(spark, SF_SMALL)
+        builds = _count_builds(monkeypatch, key)
+        a, b = rand_column(spark, SF_SMALL), rand_column(spark, SF_SMALL)
+        assert len(builds) == 2
+        assert _rows(a) != _rows(b)
+    finally:
+        del QUERIES[key]
+
+
+@pytest.mark.parametrize("in_subquery", [False, True])
+def test_plan_over_directory_not_read_through_load_table_is_never_reused(
+    spark, monkeypatch, tmp_path, in_subquery
+):
+    """An empty landing directory contributes no ``inputFiles()``, but a
+    reused plan would keep its empty listing after files arrive."""
+    key = "test_landing_count"
+    land = str(tmp_path / "land")
+    os.makedirs(land)
+
+    @register(key)
+    def landing_count(spark, sf_dir):
+        n = spark.read.schema("a long").parquet(land).agg(F.count("*").alias("n"))
+        return spark.range(1).select(n.scalar().alias("n")) if in_subquery else n
+
+    try:
+        landing_count(spark, SF_SMALL)
+        builds = _count_builds(monkeypatch, key)
+        assert landing_count(spark, SF_SMALL).first()["n"] == 0
+        pq.write_table(pa.table({"a": [1, 2]}), os.path.join(land, "part-0.parquet"))
+        assert landing_count(spark, SF_SMALL).first()["n"] == 2
+        assert len(builds) == 2
+    finally:
+        del QUERIES[key]
+
+
+def test_reused_bloom_join_still_executes_without_broadcast(spark, monkeypatch):
+    key = "join_bloom_runtime"
+    QUERIES[key](spark, SF_SMALL)
+    QUERIES[key](spark, SF_SMALL)
+    builds = _count_builds(monkeypatch, key)
+    df = QUERIES[key](spark, SF_SMALL)
+    df.collect()
+    assert builds == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+
+
+def test_concurrent_callers_get_equal_results(spark, tmp_path):
+    """More threads than cores call two keys on a fresh fixture copy,
+    racing on the frame fill and the plan-cache fill; every call of a
+    key must return the same rows."""
+    sf = _copy_fixtures(tmp_path)
+
+    def run(key):
+        return _rows(QUERIES[key](spark, sf))
+
+    keys = ["ts_pacf", "agg_groupby"] * 6
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism + 2) as pool:
+            futures = [pool.submit(run, k) for k in keys]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    for key, got in zip(keys, results):
+        assert got == results[keys.index(key)]
