@@ -11,12 +11,13 @@ module only adapts it to the driver contract.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _configure(spark: SparkSession) -> None:
@@ -39,10 +40,14 @@ def _configure(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     except Exception:  # pragma: no cover
         pass
+    from e2e_data_pipeline_spark.session import (
+        ensure_worker_imports,
+        use_local_checkpoint_manager,
+    )
+
+    use_local_checkpoint_manager(spark)
     # Ship the package to Python workers (addPyFile zip) so the ~23
     # pickled-function ops survive a driver launched from any cwd.
-    from e2e_data_pipeline_spark.session import ensure_worker_imports
-
     ensure_worker_imports(spark)
 
 

@@ -20,6 +20,25 @@ the 1000-executor / 100 TB case and merely *also* works locally:
 - An operator that needs its own SQL conf runs in a clone of the
   caller's session (:func:`scoped_session`), never by changing the
   caller's; no other module sets, unsets or creates a session conf.
+- Streaming checkpoints on a local default filesystem go through
+  Spark's ``FileSystem``-based checkpoint manager
+  (:func:`use_local_checkpoint_manager`, applied by :func:`get_spark`
+  and to driver-provided sessions by ``__spark_entry__``). Without
+  native Hadoop (``libhadoop.so``) the local filesystem runs one
+  ``readlink`` or ``chmod`` process per link-status or permission
+  call. Spark's default ``FileContext``-based manager makes 8
+  ``readlink`` and 2 ``chmod`` calls per checkpoint file (offsets and
+  commit log entries, file-source log, state-store deltas, snapshots
+  and checksums); the ``FileSystem``-based one makes the 2 ``chmod``
+  calls only. On ``file:`` nothing is lost: FileContext's no-overwrite
+  rename on local disk is itself a check-then-rename (status of source
+  and destination, then ``File.renameTo``), the same as this manager's
+  ``exists`` check before ``rename``, and both write through the
+  checksummed local filesystem, so ``.crc`` side files are still
+  written and verified. Any other default filesystem keeps Spark's
+  default: on HDFS the FileContext rename is atomic, and the
+  ``FileSystem``-based manager's overwrite path differs. A session
+  that already names a checkpoint manager keeps it.
 """
 
 from __future__ import annotations
@@ -28,6 +47,7 @@ import os
 import tempfile
 import threading
 import zipfile
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -46,6 +66,12 @@ _REPO_ROOT = os.path.dirname(_PKG_DIR)
 CODEGEN_CACHE_ENTRIES = 2000
 
 _SCOPED_LOCK = threading.Lock()
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -83,6 +109,32 @@ def ensure_worker_imports(spark: SparkSession) -> None:
         os.replace(tmp, zpath)
     sc.addPyFile(zpath)
     sc._e2e_pyfile_added = True
+
+
+def checkpoint_manager_conf(default_fs: str) -> dict[str, str]:
+    """The checkpoint-manager conf for a session whose default
+    filesystem is the URI ``default_fs``: the ``FileSystem``-based
+    manager on ``file:``, nothing (Spark's default) on anything else."""
+    if urlparse(default_fs).scheme == "file":
+        return {CHECKPOINT_MANAGER_KEY: FS_CHECKPOINT_MANAGER}
+    return {}
+
+
+def use_local_checkpoint_manager(spark: SparkSession) -> None:
+    """Apply :func:`checkpoint_manager_conf` to ``spark``'s runtime conf,
+    unless it already names a checkpoint manager.
+
+    The default filesystem is read from the session's own Hadoop conf,
+    the one ``CheckpointFileManager.create`` is given for the offsets
+    and commit logs and, on executors, for the state store.
+    """
+    if spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is not None:
+        return
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    default_fs = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoop_conf)
+    for k, v in checkpoint_manager_conf(default_fs.toString()).items():
+        spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "e2e-data-pipeline-spark") -> SparkSession:
@@ -136,6 +188,7 @@ def get_spark(app_name: str = "e2e-data-pipeline-spark") -> SparkSession:
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
     spark = builder.getOrCreate()
+    use_local_checkpoint_manager(spark)
     ensure_worker_imports(spark)
     return spark
 

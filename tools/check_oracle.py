@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from e2e_data_pipeline_spark.schemas import TABLES  # noqa: E402
 

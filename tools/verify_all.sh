@@ -2,8 +2,8 @@
 # The complete round gate in one command. Run before closing a round:
 #   bash tools/verify_all.sh
 # 1. full pytest + benchmark self-tests   2. oracle sweeps at all three
-# fixture SFs   3. etl_taxi backfill and olap_mix smoke runs (each must
-# report correct)   4. headline bench       (stop on first failure)
+# fixture SFs   3. etl_taxi backfill, olap_mix and stream_events smoke
+# runs (each must report correct)   4. headline bench       (stop on first failure)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== pytest =="
@@ -21,6 +21,10 @@ echo "$last"
 grep -q '"correct": true' <<<"$last"
 echo "== olap_mix smoke (repeated QUERIES calls, most on reused plans) =="
 last=$(python3 perfbench/run.py --workload olap_mix --seed 1 --seconds 13 | tail -1)
+echo "$last"
+grep -q '"correct": true' <<<"$last"
+echo "== stream_events smoke (checkpointed micro-batches, stopped and checked) =="
+last=$(python3 perfbench/run.py --workload stream_events --seed 1 --seconds 13 | tail -1)
 echo "$last"
 grep -q '"correct": true' <<<"$last"
 echo "== bench =="
