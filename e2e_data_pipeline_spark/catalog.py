@@ -1,4 +1,5 @@
-"""Fixture-table catalog: parquet readers with pinned schemas.
+"""Fixture-table catalog: parquet readers with pinned schemas, and the
+memo of everything the package reuses across calls.
 
 ``load_table`` is the single entry point every operator uses to scan a
 fixture table. Reading through one function keeps the scan declarative
@@ -6,16 +7,27 @@ fixture table. Reading through one function keeps the scan declarative
 and column pruning — callers ``select``/``where`` on the returned
 DataFrame and the parquet scan only materializes what survives.
 
-One rule says whether a path still holds what was read from it:
-:func:`signature`. For a file it is the file's ``(ino, mtime_ns,
-size)``; for a dataset directory it is that triple, with the relative
-path, for every entry under the directory, so a part file added,
-removed or rewritten in place changes it. The facts learned about a
-path here, the frame cache's rollups and the registry's reused plans
-are all trusted only while the signature they were made under still
-holds. A build that wants to know what it read opens
-:func:`recording_inputs`: every path whose facts are looked up inside
-it (every ``load_table`` read) is noted with its signature.
+One :class:`Memo` per application (:func:`memo`) holds file facts
+(inferred schema per read setting, parquet layout), the rollup frames
+of ``operators.frame_cache`` and the reused plans of
+``operators.registry``. It lives on the application's Python
+``SparkContext``: a session and its ``session.scoped_session`` clones
+share it, and it goes with the context. Each entry keeps the
+:class:`Inputs` its build read; the memo owns one rule per concern:
+
+- Validity: an entry is used only while every path it read still has
+  its :func:`signature` and every entry it used is still resident. A
+  file's signature is its ``(ino, mtime_ns, size)``; a directory's is
+  that triple, with the relative path, for every entry under it, so a
+  part file added, removed or rewritten in place changes it.
+- Eviction: entries are kept for the ``_CACHE_MAX_DIRS`` fixture dirs
+  used last, across all kinds; an evicted frame is unpersisted.
+- Locking: one lock guards the maps and is never held during a build,
+  so a lookup never waits for another entry's build; callers racing on
+  one missing entry build it once (:meth:`Memo.fill`).
+
+A build learns what it read by opening :func:`recording_inputs`: every
+path (every ``load_table`` read) and memo entry it uses is noted.
 """
 
 from __future__ import annotations
@@ -25,7 +37,9 @@ import glob
 import os
 import stat
 import threading
-from collections.abc import Iterator
+import weakref
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,12 +48,8 @@ from e2e_data_pipeline_spark.schemas import TABLES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# path -> (signature, facts): what the catalog has learned about the
-# file or directory at ``path`` (its row-group layout, the schema Spark
-# inferred for it). Facts are trusted only while the path's signature
-# is unchanged; a table rewritten at the same path starts from an
-# empty entry.
-_FILE_FACTS: dict[str, tuple[tuple, dict]] = {}
+# Keep memo entries for at most this many fixture dirs per application.
+_CACHE_MAX_DIRS = 3
 
 # Per thread: the Inputs records open in recording_inputs(), innermost
 # last.
@@ -84,14 +94,14 @@ def signature(path: str) -> tuple:
 class Inputs:
     """What one build read: ``paths`` maps each path it looked up
     facts for (every ``load_table`` read) to the path's signature at
-    that time, and ``frames`` maps each frame-cache key it used to the
-    frame it got (filled in by ``operators.frame_cache``)."""
+    that time, and ``entries`` maps the key of each :class:`Memo` entry
+    it used (a rollup frame, a file fact) to the entry it got."""
 
-    __slots__ = ("paths", "frames")
+    __slots__ = ("paths", "entries")
 
     def __init__(self) -> None:
         self.paths: dict[str, tuple] = {}
-        self.frames: dict[tuple, object] = {}
+        self.entries: dict[tuple, Entry] = {}
 
 
 @contextlib.contextmanager
@@ -107,50 +117,150 @@ def recording_inputs() -> Iterator[Inputs]:
         stack.pop()
 
 
-def note_inputs(paths: dict[str, tuple], frames: dict[tuple, object]) -> None:
-    """Add ``paths`` and ``frames`` to every record open on the calling
+def note_inputs(paths: dict[str, tuple], entries: dict[tuple, Entry]) -> None:
+    """Add ``paths`` and ``entries`` to every record open on the calling
     thread. A path keeps the first signature noted for it, so a file
     that changes during a build leaves a record that no longer holds."""
     for rec in getattr(_RECORDING, "stack", ()):
         for p, sig in paths.items():
             rec.paths.setdefault(p, sig)
-        rec.frames.update(frames)
+        rec.entries.update(entries)
 
 
-def _file_facts(path: str) -> dict:
-    """The facts dict for ``path``, emptied whenever its
-    :func:`signature` differs from the one they were learned under.
-    The lookup is noted in any open :func:`recording_inputs`."""
-    sig = signature(path)
-    note_inputs({os.path.abspath(path): sig}, {})
-    entry = _FILE_FACTS.get(path)
-    if entry is None or entry[0] != sig:
-        entry = _FILE_FACTS[path] = (sig, {})
-    return entry[1]
+class Entry(NamedTuple):
+    """A memo entry: its value, what its build read, the dir it counts against."""
+
+    value: object
+    inputs: Inputs
+    sf_dir: str
+
+
+class Memo:
+    """What one application reuses across calls (see the module
+    docstring). A key's first item names its kind: ``("facts", path,
+    fact...)``, ``("frame", sf_dir, name)``, ``("plan", name, sf_dir)``.
+    Plans are kept per calling session, in a map that goes with it."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._dirs: dict[str, None] = {}  # resident fixture dirs, least recently used first
+        self._shared: dict[tuple, Entry] = {}
+        self._plans: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+        self._fills: dict[tuple, threading.Lock] = {}
+
+    def get(self, key: tuple, session: SparkSession | None = None) -> Entry | None:
+        """``key``'s entry (in ``session``'s map, for a plan) if it still
+        holds, else None. A lookup marks the entry's dir as used."""
+        with self._lock:
+            entry = (self._shared if session is None else self._plans.get(session, {})).get(key)
+            if entry is not None:
+                self._dirs[entry.sf_dir] = self._dirs.pop(entry.sf_dir)
+        return entry if entry is not None and self._holds(entry.inputs) else None
+
+    def put(self, key, sf_dir, value, inputs, session=None) -> Entry:
+        """Store ``value`` as ``key``'s entry, counted against ``sf_dir``,
+        evicting the least recently used dirs past ``_CACHE_MAX_DIRS``."""
+        entry = Entry(value, inputs, os.path.abspath(sf_dir))
+        with self._lock:
+            self._dirs[entry.sf_dir] = self._dirs.pop(entry.sf_dir, None)
+            stale = list(self._dirs)[:-_CACHE_MAX_DIRS]
+            dropped = [kv for d in stale for kv in self._pop_dir(d)]
+            entries = self._shared if session is None else self._plans.setdefault(session, {})
+            if key in entries:
+                dropped.append((key, entries[key]))
+            entries[key] = entry
+        _unpersist(dropped)
+        return entry
+
+    def fill(self, key: tuple, sf_dir: str, build: Callable[[], object]) -> Entry:
+        """``key``'s entry if it holds, else a new one from ``build()``
+        and what it read; either is noted in the caller's open
+        :func:`recording_inputs`. Callers racing on one key run
+        ``build`` once; only they wait for it."""
+        entry = self.get(key)
+        if entry is None:
+            with self._lock:
+                filling = self._fills.setdefault(key, threading.Lock())
+            with filling:
+                try:
+                    entry = self.get(key)
+                    if entry is None:
+                        with recording_inputs() as inputs:
+                            value = build()
+                        entry = self.put(key, sf_dir, value, inputs)
+                finally:  # a caller that takes a new lock finds the entry
+                    with self._lock:
+                        self._fills.pop(key, None)
+        note_inputs(entry.inputs.paths, {**entry.inputs.entries, key: entry})
+        return entry
+
+    def evict(self, sf_dir: str) -> None:
+        """Drop every entry counted against ``sf_dir``."""
+        with self._lock:
+            dropped = self._pop_dir(os.path.abspath(sf_dir))
+        _unpersist(dropped)
+
+    def _pop_dir(self, sf_dir: str) -> list[tuple[tuple, Entry]]:
+        """Remove ``sf_dir`` and its entries (the caller holds the lock)."""
+        self._dirs.pop(sf_dir, None)
+        return [
+            (k, m.pop(k))
+            for m in (self._shared, *self._plans.values())
+            for k in [k for k, e in m.items() if e.sf_dir == sf_dir]
+        ]
+
+    def _holds(self, inputs: Inputs) -> bool:
+        """Whether every path in ``inputs`` still has the signature it
+        was read under and every entry in it is still resident."""
+        try:
+            if any(signature(p) != sig for p, sig in inputs.paths.items()):
+                return False
+        except OSError:
+            return False
+        return all(self._shared.get(k) is e for k, e in inputs.entries.items())
+
+
+def _unpersist(dropped: list[tuple[tuple, Entry]]) -> None:
+    """Best-effort unpersist of the frames among ``dropped`` entries."""
+    for key, e in dropped:
+        if key[0] == "frame":
+            for f in e.value if isinstance(e.value, tuple) else (e.value,):
+                with contextlib.suppress(Exception):
+                    f.unpersist()
+
+
+def memo(spark: SparkSession) -> Memo:
+    """The :class:`Memo` of ``spark``'s application (on its ``SparkContext``)."""
+    sc = spark.sparkContext
+    return sc.__dict__.get("_e2e_memo") or sc.__dict__.setdefault("_e2e_memo", Memo())
+
+
+def _file_fact(spark: SparkSession, path: str, fact: tuple, build: Callable[[], object]):
+    """``build()``'s ``fact`` about the file or directory at ``path``,
+    learned again whenever its :func:`signature` changes. Raises
+    ``OSError`` for a path that is not on the local filesystem."""
+    path = os.path.abspath(path)
+
+    def learn():
+        note_inputs({path: signature(path)}, {})
+        return build()
+
+    return memo(spark).fill(("facts", path, *fact), os.path.dirname(path), learn).value
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """A new parquet relation over ``path``, with schema inference (a
-    Spark job that reads a footer) run once per file signature, session
+    Spark job that reads a footer) run once per file signature,
     application and schema-relevant read setting."""
+    fact = ("schema", *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
     try:
-        facts = _file_facts(path)
+        schema = _file_fact(spark, path, fact, lambda: spark.read.parquet(path).schema)
     except OSError:  # not a local path: let Spark resolve (or reject) it
         return spark.read.parquet(path)
-    key = (
-        "schema",
-        spark.sparkContext.applicationId,
-        *(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
-    )
-    schema = facts.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        facts[key] = df.schema
-        return df
     return spark.read.schema(schema).parquet(path)
 
 
-def _parquet_layout(path: str) -> tuple[int, int]:
+def _parquet_layout(spark: SparkSession, path: str) -> tuple[int, int]:
     """(row groups, bytes) across the file or directory at ``path``.
 
     Row groups bound parquet scan parallelism: Spark splits files by
@@ -158,8 +268,8 @@ def _parquet_layout(path: str) -> tuple[int, int]:
     yields an empty task, so a 1-row-group file scans on 1 core no
     matter the split config.
     """
-    facts = _file_facts(path)
-    if "layout" not in facts:
+
+    def layout() -> tuple[int, int]:
         import pyarrow.parquet as pq
 
         files = (
@@ -168,9 +278,9 @@ def _parquet_layout(path: str) -> tuple[int, int]:
             else [path]
         )
         groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        size = sum(os.path.getsize(f) for f in files)
-        facts["layout"] = (groups, size)
-    return facts["layout"]
+        return groups, sum(os.path.getsize(f) for f in files)
+
+    return _file_fact(spark, path, ("layout",), layout)
 
 
 def _maybe_rebalance(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -186,7 +296,7 @@ def _maybe_rebalance(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
     round-robin exchange, so the scan stays minimal (tests/test_plans).
     """
     cores = spark.sparkContext.defaultParallelism
-    groups, size = _parquet_layout(path)
+    groups, size = _parquet_layout(spark, path)
     if groups < max(2, cores // 2) and size >= _REBALANCE_MIN_BYTES:
         return _spread(df, cores)
     return df
@@ -217,7 +327,7 @@ def rebalance_cpu(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) ->
     scan already has more row groups than cores). r10 optimization
     helper; see fn_xpath for the measured motivation (20.3 s -> 0.7 s
     single-threaded XML parse at sf0.1)."""
-    groups, _ = _parquet_layout(table_path(sf_dir, name))
+    groups, _ = _parquet_layout(spark, table_path(sf_dir, name))
     cores = spark.sparkContext.defaultParallelism
     if groups < max(2, cores // 2):
         return _spread(df, cores)

@@ -1,26 +1,19 @@
-"""Session-scoped frame memoization for shared rollups.
+"""Per-application frame memoization for shared rollups.
 
 Dozens of operators independently rebuild the same small intermediate
 frames from the big fact tables: the graph family's co-purchase edge
 list + BSP label fixed point (memoized in r9, llm_dedup), and ~50
 day-grain rollups of ``events`` / ``orders`` (r9 verdict item 2). At
 100 TB each rebuild is a full fact-table pass; memoizing the rollup
-once per (applicationId, fixture dir) turns N passes into one pass
+once per (application, fixture dir) turns N passes into one pass
 feeding N reports. Frames are ``localCheckpoint(eager=True)``-pinned
-so consumers start from materialized blocks, and the cache is BOUNDED
-BY FIXTURE DIR (keep-last-N) so sweep sessions that touch sf0.001 /
-sf0.01 / sf0.1 plus /tmp scale-smoke inflations don't pin every dir's
-frames in executor memory for the session lifetime (r9 advice).
+so consumers start from materialized blocks.
 
-Each entry is also stored with what its build read (``catalog.Inputs``:
-the :func:`catalog.signature` of every path it read through
-``load_table``, and the other frames it used). A lookup whose table
-has changed since then is a miss: the frame is rebuilt and the stale
-one unpersisted. A lookup, hit or miss, notes the frame and its inputs
-in the caller's open ``catalog.recording_inputs`` records, which is how
-the registry's plan cache learns which frames a plan stands on
-(:func:`inputs_current`). This module must stay importable before the
-``operators`` package and must never import ``registry``.
+The frames are entries of the application's ``catalog.Memo``, which
+rebuilds, evicts (unpersisting) and locks them, and notes each lookup
+in the caller's ``catalog.recording_inputs`` records. This module must
+stay importable before the ``operators`` package and must never import
+``registry``.
 
 Derived-value exactness: the cached measures are integer counts and
 integer-cent sums — associative and commutative — so any re-aggregate
@@ -32,93 +25,16 @@ blocks instead of re-aggregating the by-type frame on every call.
 
 from __future__ import annotations
 
-import threading
-from collections.abc import Iterable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from e2e_data_pipeline_spark.catalog import (
-    Inputs,
-    load_table,
-    note_inputs,
-    recording_inputs,
-    signature,
-)
-
-# (applicationId, sf_dir, frame-name) -> localCheckpointed DataFrame
-# (or tuple of DataFrames). Keyed by application id so a restarted
-# session never sees another context's checkpointed RDDs.
-_FRAME_CACHE: dict = {}
-
-# key -> the Inputs its build read. An entry without one is valid for
-# as long as it is resident.
-_FRAME_INPUTS: dict = {}
-
-# Keep frames for at most this many distinct fixture dirs per app.
-_CACHE_MAX_DIRS = 3
-
-# Reentrant: a frame's build may look up another frame.
-_LOCK = threading.RLock()
-
-
-def dirs_to_evict(resident: Iterable[str], sf_dir: str) -> set[str]:
-    """The fixture dirs to drop before a cache whose entries span the
-    ``resident`` dirs (oldest first, repeats allowed) takes an entry
-    for ``sf_dir``: the oldest past the keep-last-``_CACHE_MAX_DIRS``
-    bound."""
-    seen = list(dict.fromkeys(resident))
-    if sf_dir in seen or len(seen) < _CACHE_MAX_DIRS:
-        return set()
-    return set(seen[: len(seen) - (_CACHE_MAX_DIRS - 1)])
-
-
-def inputs_current(inputs: Inputs) -> bool:
-    """Whether every path in ``inputs`` still has the signature it was
-    read under and every frame in it is still the resident entry."""
-    for path, sig in inputs.paths.items():
-        try:
-            if signature(path) != sig:
-                return False
-        except OSError:
-            return False
-    return all(_FRAME_CACHE.get(k) is f for k, f in inputs.frames.items())
-
-
-def _drop(key) -> None:
-    """Remove ``key``'s entry and (best effort) unpersist its frames."""
-    val = _FRAME_CACHE.pop(key)
-    _FRAME_INPUTS.pop(key, None)
-    for f in val if isinstance(val, (tuple, list)) else (val,):
-        try:
-            f.unpersist()
-        except Exception:
-            pass
+from e2e_data_pipeline_spark.catalog import load_table, memo
 
 
 def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
-    """Memoize ``build()`` per (applicationId, sf_dir, name) while the
-    tables it read are unchanged, evicting (and best-effort
-    unpersisting) the oldest fixture dir's entries once more than
-    ``_CACHE_MAX_DIRS`` dirs are resident."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    with _LOCK:
-        inputs = _FRAME_INPUTS.get(key, Inputs())
-        if key in _FRAME_CACHE and inputs_current(inputs):
-            val = _FRAME_CACHE[key]
-        else:
-            if key in _FRAME_CACHE:
-                _drop(key)
-            stale = dirs_to_evict((d for a, d, _ in _FRAME_CACHE if a == app), sf_dir)
-            for k in [k for k in _FRAME_CACHE if k[0] == app and k[1] in stale]:
-                _drop(k)
-            with recording_inputs() as inputs:
-                val = build()
-            _FRAME_CACHE[key] = val
-            _FRAME_INPUTS[key] = inputs
-    note_inputs(inputs.paths, {**inputs.frames, key: val})
-    return val
+    """``build()``'s frame (or tuple of frames) for (``sf_dir``, ``name``),
+    built once per application while what it read is unchanged."""
+    return memo(spark).fill(("frame", sf_dir, name), sf_dir, build).value
 
 
 def events_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e2e_data_pipeline_spark.catalog import load_table
+from e2e_data_pipeline_spark.catalog import load_table, memo
 from e2e_data_pipeline_spark.operators.registry import dec, dec_avg, dec_sum, register
 from e2e_data_pipeline_spark.session import scoped_session
 
@@ -1085,8 +1085,6 @@ def join_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cost-based-optimizer demonstration: stats-driven join reordering.
 # ---------------------------------------------------------------------------
 
-_CBO_DBS_BUILT: set[str] = set()
-
 
 def _cbo_materialize(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the 3 join tables as managed tables and ANALYZE them.
@@ -1095,8 +1093,9 @@ def _cbo_materialize(spark: SparkSession, sf_dir: str) -> str:
     not parquet paths — so the demo saves column-pruned copies into a
     dedicated database (under /tmp, keyed by the fixture dir) and runs
     ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS`` on the join
-    keys + the filter column. Cached per-process so repeated calls in
-    one test session don't rewrite.
+    keys + the filter column. Kept in the application's
+    ``catalog.Memo`` while the tables it read are unchanged, so repeated
+    calls don't rewrite and a new application builds its own.
     """
     import os
     import re
@@ -1107,30 +1106,31 @@ def _cbo_materialize(spark: SparkSession, sf_dir: str) -> str:
     # abort each other's saveAsTable mid-write.
     tag = re.sub(r"\W+", "_", sf_dir).strip("_") + f"_{os.getpid()}"
     db = f"cbo_demo_{tag}"
-    if db in _CBO_DBS_BUILT:
+
+    def build() -> str:
+        # The warehouse location outlives the in-memory catalog (a prior
+        # *process* may have left files where this process has no table
+        # entry), so start from a clean slate: drop both sides.
+        loc = f"/tmp/spark_graft_cbo/{tag}"
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        shutil.rmtree(loc, ignore_errors=True)
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
+        cols = {
+            "lineitem": ["l_orderkey", "l_extendedprice"],
+            "orders": ["o_orderkey", "o_custkey"],
+            "customer": ["c_custkey", "c_mktsegment"],
+        }
+        for t, cs in cols.items():
+            load_table(spark, sf_dir, t).select(*cs).write.mode(
+                "overwrite"
+            ).saveAsTable(f"{db}.{t}")
+            spark.sql(
+                f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR COLUMNS "
+                + ", ".join(cs)
+            )
         return db
-    # The warehouse location outlives the in-memory catalog (a prior
-    # *process* may have left files where this process has no table
-    # entry), so start from a clean slate: drop both sides.
-    loc = f"/tmp/spark_graft_cbo/{tag}"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    cols = {
-        "lineitem": ["l_orderkey", "l_extendedprice"],
-        "orders": ["o_orderkey", "o_custkey"],
-        "customer": ["c_custkey", "c_mktsegment"],
-    }
-    for t, cs in cols.items():
-        load_table(spark, sf_dir, t).select(*cs).write.mode(
-            "overwrite"
-        ).saveAsTable(f"{db}.{t}")
-        spark.sql(
-            f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(cs)
-        )
-    _CBO_DBS_BUILT.add(db)
-    return db
+
+    return memo(spark).fill(("cbo", sf_dir), sf_dir, build).value
 
 
 @register(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e2e_data_pipeline_spark.catalog import load_table
+from e2e_data_pipeline_spark.operators import frame_cache
 from e2e_data_pipeline_spark.operators.registry import register
 
 NEAR_DUP_THRESHOLD = 0.6
@@ -2199,15 +2200,10 @@ def graph_reach2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The graph family (components / modularity / triangles / ...) shares one
-# edge list and one 6-round label fixed point; before r9 every key rebuilt
-# them from scratch (~9+6+6 s of the sf0.1 sweep tail). At 100 TB this is
-# one BSP pass feeding N reports instead of N passes.
-def _graph_cached(spark: SparkSession, sf_dir: str, name: str, build):
-    # delegates to the shared session cache (frame_cache.py) — the r9
-    # graph memoization generalized with keep-last-N-dirs eviction
-    from e2e_data_pipeline_spark.operators.frame_cache import session_cached
-
-    return session_cached(spark, sf_dir, f"graph:{name}", build)
+# edge list and one 6-round label fixed point (frame_cache.session_cached);
+# before r9 every key rebuilt them from scratch (~9+6+6 s of the sf0.1
+# sweep tail). At 100 TB this is one BSP pass feeding N reports instead of
+# N passes.
 
 
 def _trading_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2236,7 +2232,7 @@ def _trading_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return _graph_cached(spark, sf_dir, "trading_pairs", build)
+    return frame_cache.session_cached(spark, sf_dir, "graph:trading_pairs", build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2245,8 +2241,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     One self-equi-join on l_orderkey; the support filter keeps the
     edge list sparse. Memoized (localCheckpointed) per session+fixture
     since ~6 graph keys consume the identical frame."""
-    return _graph_cached(
-        spark, sf_dir, "edges", lambda: _build_copurchase_edges(spark, sf_dir)
+    return frame_cache.session_cached(
+        spark, sf_dir, "graph:edges", lambda: _build_copurchase_edges(spark, sf_dir)
     )
 
 
@@ -2562,8 +2558,8 @@ def _cc_label_frames(spark: SparkSession, sf_dir: str):
     graph_modularity; the fixed point (round 7 changes nothing) is
     unit-pinned. Memoized per session+fixture (r9): the six eager
     join rounds run ONCE and feed every consumer."""
-    return _graph_cached(
-        spark, sf_dir, "cc_labels",
+    return frame_cache.session_cached(
+        spark, sf_dir, "graph:cc_labels",
         lambda: _build_cc_label_frames(spark, sf_dir),
     )
 
@@ -3230,7 +3226,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    edges = _graph_cached(spark, sf_dir, "lpa_edges", _lpa_edges)
+    edges = frame_cache.session_cached(spark, sf_dir, "graph:lpa_edges", _lpa_edges)
     cnodes = (
         cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .select(

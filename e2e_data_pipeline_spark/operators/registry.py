@@ -29,21 +29,17 @@ DataFrame is still optimized, planned and run in full, with its own
    relation in its plan or its subqueries, lies under a path it read
    through ``catalog.load_table``.
 
-An entry is reused only while the caller's session conf has the hash it
-had at build time, every path the build read has its build-time
-``catalog.signature``, and every frame-cache frame it used is still
-resident (``frame_cache.inputs_current``). The reused DataFrame is
-bound to the session the build bound it to, which for an operator that
-runs in a ``session.scoped_session`` clone is the clone. Entries live
-per session in ``spark.__dict__``, keyed on (key, sf_dir), bounded by
-the frame cache's keep-last-dirs rule.
+A kept plan is an entry of the application's ``catalog.Memo`` (in the
+calling session's map, keyed on (key, sf_dir)), reused while the memo
+says it holds and the caller's conf has its build-time hash. The reused
+DataFrame is bound to the session the build bound it to, which for an
+operator that runs in a ``session.scoped_session`` clone is the clone.
 """
 
 from __future__ import annotations
 
 import functools
 import os
-import threading
 from collections.abc import Callable
 from typing import NamedTuple
 from urllib.parse import unquote, urlparse
@@ -51,22 +47,18 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from e2e_data_pipeline_spark.catalog import Inputs, note_inputs, recording_inputs
-from e2e_data_pipeline_spark.operators import frame_cache
+from e2e_data_pipeline_spark.catalog import memo, note_inputs, recording_inputs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-_PLAN_LOCK = threading.Lock()
-
 
 class _Plan(NamedTuple):
     plan: object  # the JVM analyzed LogicalPlan
-    owner: SparkSession
+    owner: SparkSession | None  # None: the caller (its map must not keep it alive)
     conf_hash: int
-    inputs: Inputs
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -92,19 +84,17 @@ def _reuse_or_build(name: str, query, spark: SparkSession, sf_dir: str) -> DataF
     """A new Dataset over ``name``'s reusable plan for (``spark``,
     ``sf_dir``) if there is one, else the result of a build (kept for
     reuse if the module docstring's rules allow)."""
-    cache = spark.__dict__.setdefault("_e2e_plan_cache", {})
+    m = memo(spark)
+    key = ("plan", name, sf_dir)
     conf_hash = spark._jsparkSession.conf().getAllAsJava().hashCode()
-    hit = cache.get((name, sf_dir))
-    if (
-        hit is not None
-        and hit.conf_hash == conf_hash
-        and frame_cache.inputs_current(hit.inputs)
-    ):
-        note_inputs(hit.inputs.paths, hit.inputs.frames)
+    hit = m.get(key, spark)
+    if hit is not None and hit.value.conf_hash == conf_hash:
+        note_inputs(hit.inputs.paths, hit.inputs.entries)
+        owner = hit.value.owner or spark
         jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            hit.owner._jsparkSession, hit.plan
+            owner._jsparkSession, hit.value.plan
         )
-        return DataFrame(jds, hit.owner)
+        return DataFrame(jds, owner)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     jobs = dag.numTotalJobs()
     with recording_inputs() as inputs:
@@ -116,12 +106,8 @@ def _reuse_or_build(name: str, query, spark: SparkSession, sf_dir: str) -> DataF
     if plan.deterministic() and _files_covered(
         df.inputFiles() + _file_roots(plan), inputs.paths
     ):
-        entry = _Plan(plan, df.sparkSession, conf_hash, inputs)
-        with _PLAN_LOCK:
-            stale = frame_cache.dirs_to_evict((d for _, d in cache), sf_dir)
-            for k in [k for k in cache if k[1] in stale]:
-                del cache[k]
-            cache[(name, sf_dir)] = entry
+        owner = None if df.sparkSession is spark else df.sparkSession
+        m.put(key, sf_dir, _Plan(plan, owner, conf_hash), inputs, spark)
     return df
 
 

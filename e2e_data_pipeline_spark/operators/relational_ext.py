@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e2e_data_pipeline_spark.catalog import load_table
+from e2e_data_pipeline_spark.operators.frame_cache import events_daily_by_type, orders_daily
 from e2e_data_pipeline_spark.operators.registry import (
     dec,
     dec_avg,
@@ -1732,10 +1733,6 @@ def dq_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     category-sized total that broadcasts, and O(k) final arithmetic —
     at 100 TB the shuffle carries k event types per map task.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import (
-        events_daily_by_type,
-    )
-
     days = events_daily_by_type(spark, sf_dir).select(
         "event_type", "day", "n"
     )
@@ -3951,8 +3948,6 @@ def dq_outlier_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints cost nothing at any scale. The oracle keeps the
     nested single-statement text (DuckDB has no such cliff).
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     daily = orders_daily(spark, sf_dir).select("d", "y")
     votes = _votes_frame_staged(spark, daily, "dqov")
     return spark.sql(

@@ -2355,7 +2355,7 @@ def _stream_partitions(spark: SparkSession, sf_dir: str) -> str:
     try:
         from e2e_data_pipeline_spark.catalog import _parquet_layout, table_path
 
-        _, nbytes = _parquet_layout(table_path(sf_dir, "events"))
+        _, nbytes = _parquet_layout(spark, table_path(sf_dir, "events"))
     except Exception:  # pragma: no cover - missing fixture table
         return str(spark.sparkContext.defaultParallelism)
     return str(max(4, min(32768, nbytes // (64 << 20))))

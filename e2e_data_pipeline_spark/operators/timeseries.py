@@ -6644,8 +6644,6 @@ def ts_ordinal_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded daily frame (BOUNDED_GRAIN), O(6) tail.
     Replay-pinned against a direct numpy pattern count.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     orders_daily(spark, sf_dir).select("d", "y").createOrReplaceTempView(
         "ordpat_daily"
     )
@@ -6722,8 +6720,6 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay-pinned against a from-scratch numpy SampEn in
     tests/test_cross_consistency.py.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     orders_daily(spark, sf_dir).select("d", "y").createOrReplaceTempView(
         "sampen_daily"
     )
@@ -6831,8 +6827,6 @@ def ts_dfa(spark: SparkSession, sf_dir: str) -> DataFrame:
     s=4). Replay-pinned against a from-scratch numpy least-squares
     DFA in tests/test_cross_consistency.py.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     orders_daily(spark, sf_dir).select("d", "y").createOrReplaceTempView(
         "dfa_daily"
     )
@@ -6892,8 +6886,6 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay-pinned against a brute-force Python count in
     tests/test_cross_consistency.py.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     orders_daily(spark, sf_dir).select("d", "y").createOrReplaceTempView(
         "turnpt_daily"
     )

@@ -2806,8 +2806,6 @@ def win_zigzag_swings(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle keeps the recursive-CTE text, so the hash match
     doubles as an independent cross-engine proof of the rewrite.
     """
-    from e2e_data_pipeline_spark.operators.frame_cache import orders_daily
-
     daily = (
         orders_daily(spark, sf_dir)
         .groupBy(F.expr("d div 30").alias("d"))

@@ -43,12 +43,14 @@ the 1000-executor / 100 TB case and merely *also* works locally:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import threading
 import zipfile
 from urllib.parse import urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -200,8 +202,11 @@ def scoped_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     and Python data sources, and nothing set on it reaches the caller.
     A DataFrame built on it plans and runs under ``conf`` whenever it
     is collected. One clone is kept per (``spark``, ``conf``); each
-    call re-syncs it to the caller's current modifiable conf, writing
-    only the keys that differ.
+    call re-syncs it to the caller's current conf, writing only the
+    keys that differ, whether or not Spark registers them as SQL conf
+    (``spark.hadoop.*`` and internal keys are not). A key no session may
+    change at runtime (a static SQL conf, a Spark core conf) is left as
+    it is, as on the caller.
     """
     key = tuple(sorted(conf.items()))
     with _SCOPED_LOCK:
@@ -222,9 +227,10 @@ def scoped_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
         if not jwant.equals(jhave):
             want, have = dict(jwant), dict(jhave)
             for k in have.keys() - want.keys():
-                if clone.conf.isModifiable(k):
+                with contextlib.suppress(AnalysisException):
                     clone.conf.unset(k)
             for k, v in want.items():
-                if have.get(k) != v and (k in conf or clone.conf.isModifiable(k)):
-                    clone.conf.set(k, v)
+                if have.get(k) != v:
+                    with contextlib.suppress(AnalysisException):
+                        clone.conf.set(k, v)
     return clone

@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import sys
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
@@ -29,11 +31,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from e2e_data_pipeline_spark.catalog import load_table, table_path
+from e2e_data_pipeline_spark.catalog import load_table, memo, table_path
 from e2e_data_pipeline_spark.operators import ORACLES, QUERIES, frame_cache, register
 from e2e_data_pipeline_spark.schemas import TABLES
 
-from tests.conftest import SF_SMALL
+from tests.conftest import REPO_ROOT, SF_SMALL
 from tools.check_oracle import canon
 
 # the keys of the olap_mix benchmark workload: 5 scan keys, then the 4
@@ -263,8 +265,7 @@ def test_evicted_frame_forces_rebuild(spark, monkeypatch, tmp_path):
     sf = _copy_fixtures(tmp_path)
 
     def evict():
-        for k in [k for k in frame_cache._FRAME_CACHE if k[1] == sf]:
-            frame_cache._drop(k)
+        memo(spark).evict(sf)
 
     df = _reused_then_changed(spark, monkeypatch, "ts_pacf", sf, evict)
     _assert_matches_oracle(df, sf, "ts_pacf")
@@ -354,3 +355,162 @@ def test_concurrent_callers_get_equal_results(spark, tmp_path):
         sys.setswitchinterval(interval)
     for key, got in zip(keys, results):
         assert got == results[keys.index(key)]
+
+
+def test_callers_on_two_dirs_build_each_rollup_once_and_concurrently(
+    spark, monkeypatch, tmp_path
+):
+    """Two threads per fixture copy interleave three keys on two fresh
+    copies (with ``SF_SMALL``, three dirs: within the bound). The first
+    rollup build of each copy waits at a barrier for the other copy's,
+    so a lookup that waits for another entry's build times out."""
+    keys = ["ts_pacf", "dq_drift_tvd", "agg_groupby"]
+    expected = {k: _rows(QUERIES[k](spark, SF_SMALL)) for k in keys}
+    dirs = [str(tmp_path / f"sf{i}") for i in range(2)]
+    for d in dirs:
+        shutil.copytree(SF_SMALL, d)
+
+    builds: dict = {}
+    barrier = threading.Barrier(len(dirs), timeout=120)
+    original = frame_cache.session_cached
+
+    def counted(spark, sf_dir, name, build):
+        def timed_build():
+            builds[(sf_dir, name)] = builds.get((sf_dir, name), 0) + 1
+            if name == "events_daily_by_type":
+                barrier.wait()
+            return build()
+
+        return original(spark, sf_dir, name, timed_build)
+
+    monkeypatch.setattr(frame_cache, "session_cached", counted)
+
+    def run(sf_dir, order):
+        return [(k, _rows(QUERIES[k](spark, sf_dir))) for k in order * 2]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(2 * len(dirs)) as pool:
+            futures = [
+                pool.submit(run, d, keys[i:] + keys[:i])
+                for d in dirs
+                for i in range(2)
+            ]
+            results = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    for calls in results:
+        for key, got in calls:
+            assert got == expected[key], key
+    assert {d for d, _ in builds} == set(dirs)
+    assert all(n == 1 for n in builds.values()), builds
+
+
+# Runs in its own interpreter: it stops its session, and it inspects
+# everything reachable from the package's module-level names.
+MEMO_SCRIPT = r"""
+import gc
+import os
+import shutil
+import sys
+import types
+import weakref
+
+sys.path.insert(0, sys.argv[1])
+work, mode = sys.argv[2], sys.argv[3]
+os.environ["SPARK_GRAFT_CPUS"] = "2"
+
+from e2e_data_pipeline_spark.operators import QUERIES
+from e2e_data_pipeline_spark.session import get_spark
+
+SF_SMALL = "/root/testdata/sf0.001"
+MAX_DIRS = 3
+
+
+def held_dirs(dirs, *roots):
+    # The dirs among ``dirs`` that a string reachable from the package's
+    # module-level names (or from ``roots``) names. Functions, classes
+    # and modules are not followed, so the walk stays in data.
+    skip = (types.ModuleType, type, types.FunctionType, types.MethodType,
+            types.BuiltinFunctionType, types.CodeType, types.FrameType)
+    mods = [m for n, m in list(sys.modules.items()) if n.startswith("e2e_data_pipeline_spark")]
+    module_dicts = {id(vars(m)) for m in list(sys.modules.values()) if m is not None}
+    stack = [v for m in mods for v in vars(m).values()] + list(roots)
+    seen, held = set(), set()
+    while stack:
+        o = stack.pop()
+        if id(o) in seen:
+            continue
+        seen.add(id(o))
+        if isinstance(o, str):
+            held.update(d for d in dirs if o == d or o.startswith(d + os.sep))
+        elif not isinstance(o, skip) and id(o) not in module_dicts:
+            stack.extend(gc.get_referents(o))
+    return held
+
+
+def fill(spark, dirs):
+    for d in dirs:
+        for key in ("ts_pacf", "agg_groupby"):
+            for _ in range(2):
+                QUERIES[key](spark, d).collect()
+
+
+dirs = []
+for i in range(5):
+    dirs.append(os.path.join(work, f"sf{i}"))
+    shutil.copytree(SF_SMALL, dirs[-1])
+
+spark = get_spark("memo-" + mode)
+if mode == "bound":
+    fill(spark, dirs)
+    held = held_dirs(dirs, spark)
+    assert held == set(dirs[-MAX_DIRS:]), sorted(held)
+else:
+    fill(spark, dirs[:2])
+    QUERIES["join_cbo_reorder"](spark, dirs[2]).collect()
+    old = weakref.ref(spark.sparkContext)
+    spark.stop()
+    del spark
+    spark = get_spark("memo-restarted")
+    # the stopped application's catalog (and its CBO tables) is gone
+    QUERIES["join_cbo_reorder"](spark, dirs[2]).collect()
+    fill(spark, dirs[2:3])
+    gc.collect()
+    assert held_dirs(dirs[:2], spark) == set(), sorted(held_dirs(dirs[:2], spark))
+    assert held_dirs(dirs[2:3], spark) == set(dirs[2:3])
+    assert old() is None, "the stopped application's context is still referenced"
+spark.stop()
+print("ok")
+"""
+
+
+def _run_memo_script(tmp_path, mode: str) -> None:
+    script = tmp_path / "memo.py"
+    script.write_text(MEMO_SCRIPT)
+    work = tmp_path / "work"
+    work.mkdir()
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO_ROOT, str(work), mode],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("ok"), (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )
+
+
+def test_caches_hold_at_most_the_last_three_dirs(tmp_path):
+    """Facts, frames and plans of ``QUERIES`` calls on five fixture dirs
+    are kept for the three used last only."""
+    _run_memo_script(tmp_path, "bound")
+
+
+def test_stopped_application_leaves_no_cache_entry(tmp_path):
+    """After ``spark.stop()`` and a new session, nothing the package
+    holds names a dir the stopped application read, the stopped context
+    can be collected, and state kept in the stopped application's
+    catalog is built again."""
+    _run_memo_script(tmp_path, "stop")

@@ -804,6 +804,7 @@ def test_session_frame_cache_evicts_old_sf_dirs(spark):
     touched (r9 advice): inserting a key for a fresh sf_dir beyond
     the keep-last-N bound evicts (and unpersists) the oldest dir's
     entries, including tuple-valued label frames."""
+    from e2e_data_pipeline_spark import catalog
     from e2e_data_pipeline_spark.operators import frame_cache as fc
 
     class FakeFrame:
@@ -814,24 +815,26 @@ def test_session_frame_cache_evicts_old_sf_dirs(spark):
             self.unpersisted = True
             return self
 
-    app = spark.sparkContext.applicationId
-    saved = dict(fc._FRAME_CACHE)
-    fc._FRAME_CACHE.clear()
+    sc = spark.sparkContext
+    saved = catalog.memo(spark)
+    memo = sc._e2e_memo = catalog.Memo()
     try:
         frames = {}
-        for i in range(fc._CACHE_MAX_DIRS):
+        for i in range(catalog._CACHE_MAX_DIRS):
             f = FakeFrame()
             frames[f"/tmp/dir{i}"] = f
             fc.session_cached(spark, f"/tmp/dir{i}", "edges", lambda f=f: f)
         # tuple-valued entry in the oldest dir must also unpersist
         pair = (FakeFrame(), FakeFrame())
-        fc._FRAME_CACHE[(app, "/tmp/dir0", "labels")] = pair
+        memo._shared[("frame", "/tmp/dir0", "labels")] = catalog.Entry(
+            pair, catalog.Inputs(), "/tmp/dir0"
+        )
         newest = FakeFrame()
         fc.session_cached(spark, "/tmp/dirN", "edges", lambda: newest)
-        dirs_left = {k[1] for k in fc._FRAME_CACHE if k[0] == app}
+        dirs_left = {e.sf_dir for e in memo._shared.values()}
         assert "/tmp/dir0" not in dirs_left
         assert "/tmp/dirN" in dirs_left
-        assert len(dirs_left) == fc._CACHE_MAX_DIRS
+        assert len(dirs_left) == catalog._CACHE_MAX_DIRS
         assert frames["/tmp/dir0"].unpersisted
         assert pair[0].unpersisted and pair[1].unpersisted
         # surviving dirs untouched, and a cache hit never rebuilds
@@ -841,5 +844,4 @@ def test_session_frame_cache_evicts_old_sf_dirs(spark):
         )
         assert got is newest
     finally:
-        fc._FRAME_CACHE.clear()
-        fc._FRAME_CACHE.update(saved)
+        sc._e2e_memo = saved

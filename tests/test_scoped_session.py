@@ -11,7 +11,7 @@ import re
 import threading
 
 from e2e_data_pipeline_spark.operators import QUERIES
-from e2e_data_pipeline_spark.session import scoped_session
+from e2e_data_pipeline_spark.session import CHECKPOINT_MANAGER_KEY, scoped_session
 
 from tests.conftest import REPO_ROOT, SF_SMALL
 
@@ -45,6 +45,25 @@ def test_scoped_session_clones_overrides_and_resyncs(spark):
 
     clone.range(1).createOrReplaceTempView("scoped_only_view")
     assert not caller.catalog.tableExists("scoped_only_view")
+
+
+def test_resync_covers_keys_spark_does_not_register(spark):
+    """Keys Spark does not register as SQL conf (so ``isModifiable`` is
+    false for them) are still runtime conf: a clone follows the
+    caller's changes to them, and the caller never sees the clone's."""
+    caller = spark.newSession()
+    clone = scoped_session(caller, {PARTS: "3"})
+    for key in (CHECKPOINT_MANAGER_KEY, "spark.hadoop.fs.scoped.marker"):
+        assert not caller.conf.isModifiable(key)
+        for value in ("first", "second"):
+            caller.conf.set(key, value)
+            assert scoped_session(caller, {PARTS: "3"}) is clone
+            assert clone.conf.get(key) == value
+        clone.conf.set(key, "clone-only")
+        assert caller.conf.get(key) == "second"
+        caller.conf.unset(key)
+        scoped_session(caller, {PARTS: "3"})
+        assert clone.conf.get(key, None) is None
 
 
 def test_sigma_clip_leaves_no_temp_view_in_caller(spark):
