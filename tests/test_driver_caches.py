@@ -418,13 +418,12 @@ import types
 import weakref
 
 sys.path.insert(0, sys.argv[1])
-work, mode = sys.argv[2], sys.argv[3]
+work, mode, SF_SMALL = sys.argv[2], sys.argv[3], sys.argv[4]
 os.environ["SPARK_GRAFT_CPUS"] = "2"
 
 from e2e_data_pipeline_spark.operators import QUERIES
 from e2e_data_pipeline_spark.session import get_spark
 
-SF_SMALL = "/root/testdata/sf0.001"
 MAX_DIRS = 3
 
 
@@ -492,7 +491,7 @@ def _run_memo_script(tmp_path, mode: str) -> None:
     work = tmp_path / "work"
     work.mkdir()
     proc = subprocess.run(
-        [sys.executable, str(script), REPO_ROOT, str(work), mode],
+        [sys.executable, str(script), REPO_ROOT, str(work), mode, SF_SMALL],
         capture_output=True,
         text=True,
         timeout=600,
